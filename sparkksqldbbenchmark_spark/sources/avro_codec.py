@@ -20,15 +20,30 @@ produces after its 5-byte header (same spec, same field order), so the
 end-to-end test — encode → add_confluent_header → Spark binary column →
 strip_confluent_header → decode — exercises the real wire format.
 
-Spark integration decodes via mapInPandas (Arrow batches, blobs never on
-the driver). At 100 TB the JVM from_avro path is the right tool; this is
-the documented degradation contract, not a replacement.
+Spark integration decodes via mapInArrow (Arrow batches, blobs never on
+the driver). Columns are built from the decoded Python values, with no
+pandas step, so a NaN double stays NaN and a long stays an exact int64
+even when a tombstone shares its batch. At 100 TB the JVM from_avro path
+is the right tool; this is the documented degradation contract, not a
+replacement.
+
+The Python boundary has a fixed cost per task, apart from the decode
+itself. pyspark begins each task in a reused worker with
+``importlib.invalidate_caches()``, and on CPython 3.11 every cached
+``zipimporter`` re-reads its archive's directory there (16 finders over
+pyspark.zip, the py4j zip and the spark-core jar). On a 4-core x86 VM, a
+trivial 3-task mapInArrow job on local[1] took 0.63 s (JVM-only job:
+0.13 s); dropping those finders at the start of each task brought it to
+0.25 s. The decode task therefore drops them (``_drop_zip_finders``);
+imports rebuild them on demand.
 """
 
 from __future__ import annotations
 
 import json
 import struct
+import sys
+import zipimport
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -177,6 +192,18 @@ def spark_schema_for(schema: dict | str) -> StructType:
     return StructType(fields)
 
 
+def _drop_zip_finders() -> None:
+    """Forget the worker's cached zipimport finders (rebuilt on demand),
+    so pyspark's per-task ``invalidate_caches()`` no longer re-reads their
+    archives (see the module docstring). Called at the start of each task,
+    not once: later top-level imports re-create some of them."""
+    cache = sys.path_importer_cache
+    for path in [
+        p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)
+    ]:
+        del cache[path]
+
+
 def decode_avro_value_python(
     df: DataFrame,
     avro_schema_json: str,
@@ -186,17 +213,19 @@ def decode_avro_value_python(
 ) -> DataFrame:
     """Degradation-path twin of decode_avro_value: same framing handling
     (strip_confluent_header expression) but the Avro body is decoded by
-    this module inside mapInPandas instead of spark-avro's from_avro.
+    this module inside mapInArrow instead of spark-avro's from_avro.
     Output schema matches from_avro's flat-record mapping, so downstream
     plans (flatten_payload etc.) are unchanged."""
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from sparkksqldbbenchmark_spark.sources.kafka import (
         strip_confluent_header,
     )
 
     schema = json.loads(avro_schema_json)
-    names = [n for n, _ in _fields(schema)]
+    struct_type = spark_schema_for(schema)
+    names = struct_type.names
     payload = (
         strip_confluent_header(F.col(value_col))
         if framed
@@ -208,39 +237,44 @@ def decode_avro_value_python(
     # Kafka columns; the struct packing below restores the real names
     # the flat __avro_ fields are always nullable regardless of the Avro
     # schema: a tombstone (null payload) nulls every field of its row
+    decoded_fields = [
+        StructField(f"__avro_{f.name}", f.dataType, True)
+        for f in struct_type.fields
+    ]
     out_schema = StructType(
         [f for f in stripped.schema.fields if f.name != "__avro_payload"]
-        + [
-            StructField(f"__avro_{f.name}", f.dataType, True)
-            for f in spark_schema_for(schema).fields
-        ]
+        + decoded_fields
     )
+    arrow_fields = [
+        pa.field(f.name, to_arrow_type(f.dataType)) for f in decoded_fields
+    ]
 
     null_record = {n: None for n in names}
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            # Kafka tombstones (null values) arrive as None/NaN in the
-            # pandas batch; decode to all-null fields so the packed struct
-            # below can become a null struct, matching from_avro's output.
+    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        _drop_zip_finders()
+        for rb in it:
+            # Kafka tombstones (null values) decode to all-null fields so
+            # the packed struct below can become a null struct, matching
+            # from_avro's output.
             decoded = [
-                decode_record(schema, bytes(b))
-                if isinstance(b, (bytes, bytearray))
-                else null_record
-                for b in pdf["__avro_payload"]
+                null_record if b is None else decode_record(schema, b)
+                for b in rb.column("__avro_payload").to_pylist()
             ]
-            res = pdf.drop(columns=["__avro_payload"])
-            for n in names:
-                res[f"__avro_{n}"] = [d[n] for d in decoded]
-            yield res
+            kept = rb.drop_columns(["__avro_payload"])
+            yield pa.RecordBatch.from_arrays(
+                kept.columns
+                + [pa.array([d[n] for d in decoded], type=af.type)
+                   for n, af in zip(names, arrow_fields)],
+                schema=pa.schema(list(kept.schema) + arrow_fields),
+            )
 
-    flat = stripped.mapInPandas(batches, out_schema)
+    flat = stripped.mapInArrow(batches, out_schema)
     # package the record fields as a `data` struct — the same shape
     # decode_avro_value produces, so flatten_payload works on either.
     # A null payload yields data = NULL (not a struct of nulls), the same
     # as the JVM from_avro path on a tombstone.
     keep = [f.name for f in df.schema.fields]
-    struct_type = spark_schema_for(schema)
     packed = F.struct(*[F.col(f"__avro_{n}").alias(n) for n in names])
     return flat.select(
         *keep,

@@ -38,7 +38,7 @@ def avro_available() -> bool:
 def probe_avro_path(spark) -> str:
     """Which Avro decode path THIS session will actually execute: "jvm"
     (spark-avro data source loaded — the 100 TB path; from_avro is
-    codegen'd) or "python" (pure-Python mapInPandas codec fallback,
+    codegen'd) or "python" (pure-Python mapInArrow codec fallback,
     sources/avro_codec.py). avro_available() only proves the pyspark
     wrapper imports; the data-source jar can still be absent and only
     fails at ANALYSIS time — so probe with a real one-row decode. The
@@ -170,7 +170,7 @@ def decode_avro_value(
     Prefers spark-avro's from_avro (JVM, codegen — the 100 TB path). When
     spark-avro is absent and ``python_fallback`` is set, flat record
     schemas decode through the pure-Python Avro codec
-    (sources/avro_codec.py, mapInPandas) with the identical output shape;
+    (sources/avro_codec.py, mapInArrow) with the identical output shape;
     set python_fallback=False to require the JVM path. With framed=False
     the payload is raw Avro (the monitor's second branch)."""
     payload = (
@@ -193,7 +193,7 @@ def decode_avro_value(
                 raise
             warnings.warn(
                 "pyspark.sql.avro import failed; falling back to the "
-                "pure-Python Avro codec (mapInPandas)",
+                "pure-Python Avro codec (mapInArrow)",
                 stacklevel=2,
             )
         except Exception as exc:

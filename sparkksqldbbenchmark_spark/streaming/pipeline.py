@@ -225,7 +225,9 @@ def run_to_memory(
 ) -> StreamingQuery:
     """Start the query into a memory sink (test/dev stand-in for the Kafka
     sink, SparkWeatherConsumer.scala:128-140). availableNow processes the
-    full backlog then stops — deterministic run-to-completion (T5)."""
+    full backlog then stops — deterministic run-to-completion (T5). A
+    backlog that does not drain within ``timeout_s`` stops the query and
+    raises TimeoutError instead of returning partial sink rows."""
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     auto_checkpoint = checkpoint is None
     if auto_checkpoint:
@@ -240,7 +242,13 @@ def run_to_memory(
     ):
         query = writer.start()
     if available_now:
-        query.awaitTermination(timeout_s)
+        if not query.awaitTermination(timeout_s):
+            query.stop()
+            raise TimeoutError(
+                f"memory sink {name!r} did not drain the backlog within"
+                f" {timeout_s}s; its rows are PARTIAL"
+                f" (checkpoint {checkpoint})"
+            )
         # An AUTO-created checkpoint is anonymous (the caller never
         # learns its path, so nothing can legitimately resume from or
         # inspect it) and the memory-sink query names are uuid-suffixed

@@ -377,3 +377,160 @@ def test_from_avro_jvm_strict_parity_when_jar_present(spark):
         .collect()
     )
     assert [r.asDict() for r in jvm] == [r.asDict() for r in py] == [rec]
+
+
+def test_decode_double_nan_is_not_null(spark):
+    """Avro `double` NaN decodes to NaN, not NULL: the Arrow batch is built
+    from the decoded Python values, with no pandas NaN-as-missing step."""
+    import math
+
+    rec = {
+        "timeObserved": "2024-06-01T12:00:00Z",
+        "stationId": 601,
+        "stationName": "st",
+        "metric": "temp_dry",
+        "value": float("nan"),
+        "producer_ts": 1717243200000,
+    }
+    framed = bytes([0]) + (9).to_bytes(4, "big") + encode_record(
+        WEATHER_SCHEMA, rec
+    )
+    df = spark.createDataFrame([(framed,)], "value binary")
+    got = decode_avro_value_python(df, WEATHER_SCHEMA).collect()[0]["data"]
+    assert got["value"] is not None and math.isnan(got["value"])
+
+
+def test_decode_long_exact_next_to_tombstone(spark):
+    """A tombstone in the same Arrow batch as records leaves every `long`
+    exact (no float64 detour: 2**62 + 1 must not come back as 2**62),
+    still yields data = NULL, and keeps the `data` struct's Spark schema."""
+    longs = [2**62 + 1, -(2**63), 2**63 - 1]
+    rows = [
+        (bytes([0]) + (9).to_bytes(4, "big") + encode_record(WEATHER_SCHEMA, {
+            "timeObserved": "2024-06-01T12:00:00Z",
+            "stationId": i,
+            "stationName": "st",
+            "metric": "temp_dry",
+            "value": 1.5,
+            "producer_ts": ts,
+        }),)
+        for i, ts in enumerate(longs)
+    ] + [(None,)]
+    df = spark.createDataFrame(rows, "value binary").coalesce(1)
+    out = decode_avro_value_python(df, WEATHER_SCHEMA)
+
+    # every field nullable, as before: a tombstone nulls the whole row
+    data_field = out.schema["data"]
+    assert data_field.nullable
+    assert [
+        (f.name, f.dataType, f.nullable) for f in data_field.dataType.fields
+    ] == [
+        (f.name, f.dataType, True)
+        for f in spark_schema_for(WEATHER_SCHEMA).fields
+    ]
+    got = out.collect()
+    assert [r["data"] for r in got if r["value"] is None] == [None]
+    assert sorted(
+        (r["data"]["stationId"], r["data"]["producer_ts"])
+        for r in got
+        if r["value"] is not None
+    ) == list(enumerate(longs))
+
+
+def test_decode_truncated_record_raises(spark):
+    """A record cut short inside its last field fails the task with the
+    codec's own error rather than decoding garbage or NULL."""
+    import pytest
+    from pyspark.errors import PythonException
+
+    body = encode_record(WEATHER_SCHEMA, {
+        "timeObserved": "t", "stationId": 1, "stationName": "s",
+        "metric": "m", "value": 0.0, "producer_ts": 2**40,
+    })
+    framed = bytes([0]) + (9).to_bytes(4, "big") + body[:-1]
+    df = spark.createDataFrame([(framed,)], "value binary")
+    with pytest.raises(PythonException, match="IndexError"):
+        decode_avro_value_python(df, WEATHER_SCHEMA).collect()
+
+
+# Runs in its own local[1] application, so that both probes and the decode
+# between them land in the one reused Python worker.
+_FINDER_PROBE = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import pyarrow as pa
+from sparkksqldbbenchmark_spark.session import SessionConfig, get_spark
+from sparkksqldbbenchmark_spark.sources.avro_codec import (
+    decode_avro_value_python,
+)
+
+FRESH = "pyspark.instrumentation_utils"
+
+
+def probe(it):
+    import os, sys, zipimport
+
+    list(it)
+    out = {
+        "pid": os.getpid(),
+        "zips": sorted(p for p, f in sys.path_importer_cache.items()
+                       if isinstance(f, zipimport.zipimporter)),
+        "pyspark_file": sys.modules["pyspark"].__file__,
+    }
+    yield pa.record_batch([pa.array([json.dumps(out)])], names=["out"])
+
+
+def probe_and_import(it):
+    import importlib, sys
+
+    list(it)
+    out = {"fresh_preloaded": FRESH in sys.modules}
+    out["fresh_file"] = importlib.import_module(FRESH).__file__
+    yield pa.record_batch([pa.array([json.dumps(out)])], names=["out"])
+
+
+spark = get_spark(SessionConfig(master="local[1]", shuffle_partitions=1,
+                                app_name="finder-probe"))
+spark.sparkContext.setLogLevel("ERROR")
+
+
+def run(fn):
+    return json.loads(spark.range(1, numPartitions=1)
+                      .mapInArrow(fn, "out string").collect()[0]["out"])
+
+
+before = run(probe)
+schema = ('{"type":"record","name":"P",'
+          '"fields":[{"name":"x","type":"long"}]}')
+df = spark.createDataFrame([(bytes([0x02]),)], "value binary").coalesce(1)
+assert decode_avro_value_python(df, schema, framed=False).collect()[0]["data"]["x"] == 1
+after = run(probe)
+imported = run(probe_and_import)
+print(json.dumps({"before": before, "after": after, "imported": imported}))
+spark.stop()
+"""
+
+
+def test_decode_task_drops_zip_finders_in_reused_worker():
+    """After a decode task, the next Python task in the same worker finds
+    no cached zipimport finder (the per-task invalidate_caches cost), and
+    a pyspark submodule never imported before still imports."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _FINDER_PROBE, repo],
+        cwd=repo, capture_output=True, text=True, timeout=240,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    before, after, imported = got["before"], got["after"], got["imported"]
+    assert before["pid"] == after["pid"], "probes ran in different workers"
+    assert after["zips"] == []
+    assert not imported["fresh_preloaded"]
+    if ".zip" in before["pyspark_file"]:
+        # the worker imports pyspark from pyspark.zip: it must still do so
+        assert before["zips"], "worker never cached a zip finder"
+        assert ".zip" in imported["fresh_file"]

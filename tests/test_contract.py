@@ -135,7 +135,7 @@ TAIL_SOURCE_SHA256 = {
     "capture_recapture_chapman_estimate": "6f09dce3ab4d0ffd",
     "sequence_packing": "d1d821a70312643e",
     "token_budget_selection": "b43116ec577d49b7",
-    "streaming_chained_window_agg": "8f75e10be002754e",
+    "streaming_chained_window_agg": "88b01e5cbfe4b622",
     "temporal_split_straddle_audit": "6f6c5224aecd05ff",
     "psi_drift_bins_exact": "42b6cc5f1f84a502",
     "graph_pregel_superstep2": "3fa1853c75993da7",
@@ -168,10 +168,10 @@ TAIL_SOURCE_SHA256 = {
     "dow_seasonal_median_residuals": "9b7c5e89edbcebc2",
     "brier_reliability_bins_exact": "2038d1d4df4c6480",
     "mmr_diversified_topk_weighted": "d4dc0c0da2015221",
-    "streaming_watermark_late_drop": "4e163260dba0aac8",
-    "streaming_outer_join_null_emission": "6fb8f9410cd2a6db",
-    "streaming_dedup_within_watermark_reemit": "424b6903466dda6e",
-    "streaming_semi_join_first_match": "2d662e8ae6e273d0",
+    "streaming_watermark_late_drop": "8256829e894a1081",
+    "streaming_outer_join_null_emission": "3b9b1970df12995d",
+    "streaming_dedup_within_watermark_reemit": "72bfe24b8def5988",
+    "streaming_semi_join_first_match": "69df42fd6403d29e",
     "cusum_drift_flags": "3aea7c00cc49746b",
     "delta_sign_runlength_stats": "6e440ddfa86f451a",
     "stratified_kfold_assignment": "a65e02a8e12f7b4a",
@@ -182,9 +182,9 @@ TAIL_SOURCE_SHA256 = {
     "monthly_revenue_mom_yoy": "d79d41f2b0364cf0",
     "longest_repeated_substring_extract": "922842425c5ebd7d",
     "weighted_bottomk_priority_sample": "8752bcf33143bb85",
-    "streaming_session_window_late_drop": "9a7d2d4715181025",
+    "streaming_session_window_late_drop": "1268ff8126f97ffe",
     "transition_dwell_matrix": "492f790f7b4111e4",
-    "streaming_dynamic_gap_session_late_drop": "f2cdf05714da32a1",
+    "streaming_dynamic_gap_session_late_drop": "ac5b4e898e0ace29",
     "multi_probe_recall_at_k_certified": "5c618921d77cd9bc",
     "order_to_ship_leadtime_histogram": "bb36b11eb4d9e01d",
     "token_tv_distance_matrix": "1f4529c9d115159f",
@@ -192,7 +192,7 @@ TAIL_SOURCE_SHA256 = {
     "local_clustering_coefficient": "ffdc825c32aef0c2",
     "kmv_sketch_union_merge_certified": "ab16e4ab8875c04b",
     "skyline_pareto_frontier": "1d6dc75a70f81339",
-    "streaming_full_outer_join_both_nulls": "863f2c62803f1cf0",
+    "streaming_full_outer_join_both_nulls": "5d407493ac7ec84c",
     "gopher_repetition_rules": "a859ec95071ed802",
     "cohens_kappa_exact": "c9efd76ba57cc6b4",
     "waterfill_budget_allocation": "ee77677cbc9f3df8",
@@ -276,7 +276,7 @@ TAIL_SOURCE_SHA256 = {
     "dq_expectation_audit": "d5328456f5bda217",
     "right_to_erasure_cascade": "25c1a80ee34de7fa",
     "curriculum_token_budget_phases": "857534e1da4557ad",
-    "avro_codec_roundtrip_batch": "238acf53f1c2558a",
+    "avro_codec_roundtrip_batch": "f51091054c8c03e5",
     "interval_overlap_join_buckets": "29c3dbb6dfa9e4ab",
     "lang_id_confusion_matrix": "af23ce9fef4e9566",
     "aqe_runtime_broadcast_conversion": "20b84a9f48dbaa51",

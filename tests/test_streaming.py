@@ -781,3 +781,30 @@ def test_state_partition_coalesce_layout_only(spark, monkeypatch):
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert parts32 == session_parts
     assert parts_auto == 2  # tiny backlog -> derived floor
+
+
+def test_run_to_memory_timeout_raises_and_stops(spark, tmp_path):
+    """An availableNow backlog that cannot drain within timeout_s stops the
+    query and raises TimeoutError instead of returning partial rows."""
+    import time
+
+    import pytest
+
+    src = str(tmp_path / "src")
+    spark.range(6).repartition(3).write.parquet(src)
+
+    @F.udf("long")
+    def slow(x):
+        time.sleep(2)
+        return x
+
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .select(slow("id").alias("id"))
+    )
+    name = f"timeout_{uuid.uuid4().hex[:8]}"
+    with pytest.raises(TimeoutError, match="PARTIAL"):
+        run_to_memory(stream, name, output_mode="append", timeout_s=1)
+    assert name not in {q.name for q in spark.streams.active}
