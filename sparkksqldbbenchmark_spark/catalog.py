@@ -4,13 +4,37 @@ Loads the driver-generated parquet tables (TESTDATA.md) and registers them
 as temp views so both the DataFrame API and the SQL front door see the same
 relations. Parquet scans get predicate pushdown + column pruning from
 Catalyst for free; loaders never collect.
+
+A table file's schema is inferred once per Python process. Spark infers
+a Parquet schema with a Spark job (ParquetFileFormat.mergeSchemasInParallel)
+on every `spark.read.parquet(path)`, even for a file it has already read:
+one such load costs about 100-200 ms and runs one job, the same read with
+a known schema 25-45 ms and no job (local[4] on a 4-core x86 VM, median
+of 10 warm loads each of events, lineitem, orders and embeddings at
+sf0.1). `load_table` therefore memoizes the inferred schema of each
+single-file table in a bounded LRU keyed by
+
+- the file's real path and a digest of its Parquet footer (the last
+  8 + footer_len bytes, read by this process), so any rewrite of the file
+  misses, including a same-size rewrite within one mtime tick;
+- the session's values of the confs that change Parquet schema
+  inference (_INFERENCE_CONFS).
+
+A miss runs exactly `spark.read.parquet(path)`; a hit loads with
+`spark.read.schema(cached).parquet(path)`. Directory datasets and paths
+this process cannot open as a local file are inferred on every load.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import struct
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -43,8 +67,66 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _schema_key(spark, path)
+    schema = _schema_memo_get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _schema_memo_put(key, df.schema)
+    else:
+        df = spark.read.schema(schema).parquet(path)
     return _normalize_nanos(df)
+
+
+# Session confs that change the schema Spark infers from a Parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """(real path, footer digest, inference confs) of a single Parquet
+    file; None when the path is not a readable local Parquet file."""
+    real = os.path.realpath(path)
+    try:
+        with open(real, "rb") as f:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            (footer_len,) = struct.unpack("<I", tail[:4])
+            f.seek(-(8 + footer_len), os.SEEK_END)
+            footer = f.read(8 + footer_len)
+    except OSError:  # a directory dataset, a remote URI, a short file
+        return None
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    return real, hashlib.sha256(footer).digest(), confs
+
+
+def _schema_memo_get(key: tuple | None) -> StructType | None:
+    if key is None:
+        return None
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+        return schema
+
+
+def _schema_memo_put(key: tuple | None, schema: StructType) -> None:
+    if key is None:
+        return
+    with _schema_memo_lock:
+        _schema_memo[key] = schema
+        _schema_memo.move_to_end(key)
+        while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
 
 
 def _normalize_nanos(df: DataFrame) -> DataFrame:

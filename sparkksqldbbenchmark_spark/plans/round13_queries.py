@@ -2271,7 +2271,7 @@ def _cc_oracle(k: int = 16, bands: int = 4, n: int = 3) -> str:
     rows = k // bands
     sh = sql_word_shingles("text", n)
     iter_tpl = """
-    , labels{i} AS (
+    , labels{i} AS MATERIALIZED (
         SELECT l.node,
                least(l.lbl, coalesce(nm.m, l.lbl)) AS lbl
         FROM labels{p} l LEFT JOIN (
@@ -2282,26 +2282,26 @@ def _cc_oracle(k: int = 16, bands: int = 4, n: int = 3) -> str:
     )"""
     iters = "".join(iter_tpl.format(i=i, p=i - 1) for i in range(1, 7))
     return f"""
-    WITH sh AS (
+    WITH sh AS MATERIALIZED (
         SELECT doc_id, {sh} AS shingles FROM documents
-    ), sigged AS (
+    ), sigged AS MATERIALIZED (
         SELECT doc_id, {sql_minhash_sig("shingles", k)} AS sig FROM sh
-    ), banded AS (
+    ), banded AS MATERIALIZED (
         SELECT doc_id, b AS band_idx,
                md5(array_to_string(list_transform(
                    sig[b*{rows}+1 : b*{rows}+{rows}],
                    x -> CAST(x AS VARCHAR)), '-')) AS bh
         FROM sigged, range(0, {bands}) t(b)
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
         SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
         FROM banded a
         JOIN banded b ON a.band_idx = b.band_idx AND a.bh = b.bh
         WHERE a.doc_id < b.doc_id
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT u AS src, v AS dst FROM pairs
         UNION ALL
         SELECT v AS src, u AS dst FROM pairs
-    ), labels0 AS (
+    ), labels0 AS MATERIALIZED (
         SELECT DISTINCT src AS node, src AS lbl FROM edges
     ){iters}
     SELECT CAST(l6.lbl AS BIGINT) AS component,

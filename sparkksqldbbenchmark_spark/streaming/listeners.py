@@ -97,14 +97,21 @@ def collect_observed_metrics(
     """Run ``start_query`` (must return a started StreamingQuery) to
     completion and return ONE dict per micro-batch that carried the
     named observation — complete even past the recentProgress ring
-    buffer. The listener is always removed afterwards."""
+    buffer. A query that does not finish within ``await_seconds`` is
+    stopped and raises TimeoutError instead of returning partial rows.
+    The listener is always removed afterwards."""
     listener = ObservedMetricsListener(observation_name)
     spark.streams.addListener(listener)
     try:
         q = start_query()
         listener.pin_query_id(str(q.id))
-        q.awaitTermination(await_seconds)
+        finished = q.awaitTermination(await_seconds)
         q.stop()
+        if not finished:
+            raise TimeoutError(
+                f"query {q.id} did not finish within {await_seconds}s;"
+                f" its {observation_name!r} metrics are PARTIAL"
+            )
         # stop() is async w.r.t. the listener bus: join on the
         # termination event so the final batches' progress is in
         if not listener.done.wait(timeout=await_seconds):

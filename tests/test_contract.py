@@ -558,13 +558,12 @@ TAIL_SOURCE_SHA256 = {
     "range_join_shipment_windows": "758fb58d4bbd52a8",
     "text_quality_scores": "c9148936e55f74b7",
 }
-INFRA_SOURCE_SHA256 = "2cba18208f7f59e9"
 # Shared-infrastructure pin (ADVICE r04, tools/tail_hash.py:68 carve-out
 # gap): loader/session semantics every TAIL query flows through. A change
 # here voids ALL TAIL evidence at once — run the full oracle sweep
 # (`python tools/check_correctness.py`) green, then regenerate with
 # `python tools/tail_hash.py`.
-INFRA_SOURCE_SHA256 = "2cba18208f7f59e9"
+INFRA_SOURCE_SHA256 = "502678ab55ec1ae0"
 
 
 def test_shared_infra_unchanged_since_green_verdict():

@@ -126,3 +126,41 @@ def test_listener_scopes_to_its_own_query(spark, tmp_path):
     b = collect_observed_metrics(spark, "audit", lambda: start_for("b"))
     assert sum(int(x["n_rows"]) for x in a) == 100
     assert sum(int(x["n_rows"]) for x in b) == 100
+
+
+def test_collect_timeout_raises_and_stops(spark, tmp_path):
+    """A query that cannot finish within await_seconds is stopped and
+    raises TimeoutError instead of returning partial per-batch rows."""
+    import time
+
+    import pytest
+
+    src = str(tmp_path / "src")
+    spark.range(6).repartition(3).write.parquet(src)
+
+    @F.udf("long")
+    def slow(x):
+        time.sleep(2)
+        return x
+
+    stream = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .select(slow("id").alias("id"))
+        .observe("audit", F.count(F.lit(1)).alias("n_rows"))
+    )
+    name = f"lsn_timeout_{uuid.uuid4().hex[:8]}"
+
+    def start():
+        return (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    with pytest.raises(TimeoutError, match="PARTIAL"):
+        collect_observed_metrics(spark, "audit", start, await_seconds=1)
+    assert name not in {q.name for q in spark.streams.active}
