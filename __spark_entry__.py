@@ -8,1488 +8,97 @@ LLM-pipeline extensions), (spark, sf_dir) → DataFrame.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Importing the plan modules populates the registry.
 import sparkksqldbbenchmark_spark.plans.reference_queries  # noqa: F401
-
-try:
-    import sparkksqldbbenchmark_spark.plans.llm_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import sparkksqldbbenchmark_spark.plans.streaming_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import sparkksqldbbenchmark_spark.plans.ksql_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import sparkksqldbbenchmark_spark.plans.extended_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import sparkksqldbbenchmark_spark.plans.curation_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    import sparkksqldbbenchmark_spark.plans.round6_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    import sparkksqldbbenchmark_spark.plans.round7_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    import sparkksqldbbenchmark_spark.plans.round8_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    import sparkksqldbbenchmark_spark.plans.round9_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    import sparkksqldbbenchmark_spark.plans.round10_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    import sparkksqldbbenchmark_spark.plans.round11_queries  # noqa: F401
-except ImportError:
-    pass
-
-try:
-    import sparkksqldbbenchmark_spark.plans.round12_queries  # noqa: F401
-except ImportError:
-    pass
-
-# The modules carrying the current graded head import WITHOUT a
-# try/except guard (ADVICE r14): a silent ImportError here would drop
-# the driver-graded cohort and quietly re-grade TAIL rows instead.
+import sparkksqldbbenchmark_spark.plans.llm_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.streaming_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.ksql_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.extended_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.curation_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round6_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round7_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round8_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round9_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round10_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round11_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.round12_queries  # noqa: F401
 import sparkksqldbbenchmark_spark.plans.round13_queries  # noqa: F401
 import sparkksqldbbenchmark_spark.plans.round14_queries  # noqa: F401
 import sparkksqldbbenchmark_spark.plans.round15_queries  # noqa: F401
 import sparkksqldbbenchmark_spark.plans.round16_queries  # noqa: F401
 import sparkksqldbbenchmark_spark.plans.round17_queries  # noqa: F401
+import sparkksqldbbenchmark_spark.plans.next_round  # noqa: F401
 
 from sparkksqldbbenchmark_spark.plans.registry import ORACLE, QUERIES
 
-# The driver grades at most the FIRST 50 registered queries per round.
-# Order is therefore part of the contract. With 113 registered queries the
-# policy is ROTATION: every query must hold a driver-graded row from SOME
-# round, so queries that have never been graded take head slots and the
-# displaced TAIL is drawn from queries that are already green in a prior
-# round's CORRECTNESS_r*.json AND whose implementation has not materially
-# changed since (their recorded verdict remains valid evidence).
-#
-# Round-4 rotation. INTO the head (never graded, or graded red, or
-# materially changed since their last green round — VERDICT r03 items
-# 2-4):
-#   dedup_ngram_jaccard     — rewritten in r03 (PPJoin prefix filtering)
-#                             after its r02 green; must re-grade
-#   multimodal_frame_sample — new deterministic hex-payload oracle
-#   approx_count_distinct   — new exact-count + 5%-bound oracle
-#   sequence_packing        — NEW (operators/packing wired per VERDICT)
-#   decontam_ngram_overlap  — NEW (llm/decontam wired per VERDICT)
-#   similarity_ann_lsh      — llm/similarity.py changed this round (the
-#                             vectorized cosine_topk rework shares the
-#                             module), voiding its r02 source pin
-#   tpch_q4_semijoin_priority — NEW: EXISTS → LEFT SEMI join shape
-#   tpch_q22_antijoin_segments — NEW: NOT EXISTS → LEFT ANTI join shape
-#   sequence_packing_manifest — NEW: per-(pack, segment) manifest
-#   tpch_q7_volume_shipping   — NEW: double-role dimension join
-#   tpch_q14_promo_revenue    — NEW: conditional-ratio aggregate
-#   tpch_q18_large_orders     — NEW: IN-over-grouped-HAVING semi join
-#   tpch_q19_disjunctive_predicates — NEW: OR-of-ANDs cross-side predicate
-#   token_budget_selection    — NEW: priority-ordered budget cut
-#   passage_dup_stats         — NEW: chunk-grain duplication audit
-#   streaming_dedup_distinct_keys — NEW: stateful stream dedup, graded
-#   pivot_hourly_by_type      — NEW: explicit-values PIVOT reshape
-#   unpivot_measure_summary   — NEW: Expand-based UNPIVOT/melt
-#   correlated_above_avg_orders — NEW: decorrelated scalar subquery
-#   approx_quantiles_bounded  — NEW: GK sketch with certified bound
-#   streaming_static_enrich   — NEW: stream-static broadcast join
-#   multimodal_resize         — NEW: mapInPandas resize-to-fit
-#   rank_function_suite       — NEW: six ranking fns, one window pass
-#   fuzzy_dedup_levenshtein   — NEW: prefix-blocked edit-distance dedup
-#   grouped_array_collect     — NEW: sort-canonicalized collect_list/set
-#   null_semantics_suite      — NEW: three-valued-logic parity row
-#   tpch_q21_waiting_suppliers — NEW: double-correlated EXISTS/NOT
-#                             EXISTS folded into one-pass per-order aggs
-#   linear_interpolation_gapfill — NEW: two-sided time-weighted gap
-#                             reconstruction (one shuffle, two windows)
-#   grouping_sets_report      — NEW: asymmetric GROUPING SETS +
-#                             GROUPING() markers, one Expand pass
-#   weather_window_agg_sql    — rotated BACK in: sql/ksql.py changed this
-#                             round (HOPPING/SESSION translations +
-#                             TUMBLING refactor); translation output is
-#                             test-pinned identical, but the policy is
-#                             re-grade on any implementing-source change
-# OUT of the head (r03 green, implementation unchanged since — pinned by
-# the TAIL_SOURCE_SHA256 check in tests/test_contract.py — and machinery
-# still covered by graded siblings):
-#   tpch_q6_selective_scan — filter+agg scan shape graded via tpch_q1
-#   tpch_q5_join_chain     — join-chain machinery graded via q3 / q10
-#   text_fingerprint       — text suite siblings token_counts / quality /
-#                            lang_id / repetition stay graded
-#   dirty_data_parsing     — try_to_timestamp graded via datetime_parse_suite
-#   time_rollup_hierarchy  — rollup machinery graded via cube_rollup_report
-#   streaming_update_mode_final — r03 green unchanged; update-cadence
-#                            machinery covered by the still-graded
-#                            streaming_latest_table + complete-mode rows
-#   region_zone_lookup     — r03 green unchanged; broadcast-dim machinery
-#                            graded via tpch_q3/q5/q10, P7 via
-#                            scalar_function_suite
-#   dedup_exact            — r03 green unchanged; dedup family graded via
-#                            minhash/keep-best/embedding/ngram head rows
-#   text_lang_id           — r03 green unchanged; regex-scan machinery
-#                            graded via text_quality/token/repetition rows
-#   top_k_values           — r03 green unchanged; TakeOrderedAndProject
-#                            machinery graded via tpch_q10/q18 tails
-#   correlation_matrix     — r03 green unchanged (operators/aggregates
-#                            untouched this round); per-key agg machinery
-#                            graded via per_station_accumulation
-#   price_prediction_pipeline — r03 green unchanged
-#   flag_derivation_dropna — r03 green unchanged (P8/P9, plans-only expr)
-#   window_function_suite  — r03 green unchanged; window machinery also
-#                            exercised by multiway ffill + keep-best rows
-#   kmv_distinct_sketch    — r03 green unchanged (operators/sketch
-#                            untouched); cardinality also graded via
-#                            approx_count_distinct's new oracle row
-#   embedding_quantization — r03 green unchanged (pure expression plan;
-#                            array-HOF machinery graded via similarity
-#                            rows and token_budget/passage rows)
-#   skewed_agg_salted      — r03 green unchanged (operators/skew
-#   skewed_join_replicated   untouched); equivalence algebra also
-#                            pinned by test_skew.py
-#   cube_rollup_report     — r03 green unchanged; Expand+HashAggregate
-#                            machinery now also graded via the
-#                            unpivot_measure_summary head row
-#   vocab_top_tokens       — r03 green unchanged; explode+count+top-k
-#                            graded via tpch_q10/q18 tails
-#   datetime_parse_suite   — r03 green unchanged; parse functions also
-#                            covered by dirty_data_parsing's pin and
-#                            scalar_function_suite stays graded
-#   text_token_counts      — r03 green unchanged (llm/text untouched);
-#                            token counting also graded via
-#                            token_budget_selection / vocab / quality
-#   stratified_sample      — r03 green unchanged (operators/sampling
-#   hash_split_assignment    untouched); scan-filter machinery also
-#                            unit-tested in test_sampling_pii.py
-#   text_repetition_ratio  — r03 green unchanged; the transform/slice
-#                            n-gram machinery is graded via the
-#                            passage_dup_stats head row
-#   union_streams_agg      — r03 green unchanged; unionByName + window
-#                            agg machinery graded via weather_window_agg
-#                            (head) and the streaming union TAIL rows
-#   asof_join_latest_view  — r03 green unchanged (operators/joins
-#                            untouched); as-of machinery also pinned by
-#                            test_asof_join_semantics
-#   per_station_accumulation — r03 green unchanged (operators/aggregates
-#                            untouched); per-key agg machinery graded
-#                            via the q21 / correlated / skew head rows
-#   range_join_shipment_windows — r03 green unchanged (operators/joins
-#                            untouched); bucket-explode machinery also
-#                            pinned by test_range_join_boundaries
-#   text_quality_scores    — r03 green unchanged (llm/text untouched);
-#                            the quality composite stays graded via
-#                            token_budget_selection / keep-best /
-#                            curation_pipeline head rows
-#
-# All TAIL entries remain registered and keep passing the local oracle
-# replica (tools/check_correctness.py); tests/test_contract.py pins that
-# the non-TAIL prefix fits in the 50-row window AND that every TAIL
-# query's implementing source is byte-identical to the version its
-# recorded green verdict graded (a changed implementation must rotate
-# back into the head — the r03 ngram_jaccard lesson).
-# Round-5 rotation. INTO the head:
-#   multimodal_decode_roundtrip — NEW: genuine PNG/WAV codec round-trip
-#                             (llm/codecs.py), analytic oracle
-#   bucketed_orders_lineitem_join — NEW: write-time bucketed co-located
-#                             join, zero-Exchange asserted in the query
-#   tpch_q8_market_share      — NEW: seven-table star → conditional-ratio
-#                             share per year (all dims broadcast)
-#   tpch_q13_customer_distribution — NEW: filter-in-join LEFT OUTER +
-#                             histogram-of-counts double aggregate
-#   tpch_q15_top_supplier     — NEW: reused aggregate "view" + max-equality
-#                             cut + broadcast enrichment
-#   hopping_window_agg        — NEW: sliding-window batch twin (Expand ×2,
-#                             constant replication), explicit-window oracle
-#   dedup_incremental_vs_corpus — NEW: new-batch vs historical-corpus LSH
-#                             lookup (never corpus⋈corpus)
-#   partitioned_write_prune   — NEW: hive-partitioned layout, pruning
-#                             asserted in the graded query
-#   range_layout_scan         — NEW: range-sorted layout, footer
-#                             disjointness + file skipping asserted
-#   dynamic_partition_pruning_join — NEW: join-driven runtime pruning
-#                             (dim-side filter broadcast into the fact
-#                             scan's PartitionFilters), asserted in-query
-#   tpch_q2/q9/q11/q16/q20      — NEW: the five partsupp-dependent
-#                             TPC-H shapes over the DETERMINISTIC
-#                             derived partsupp view (same formula in
-#                             Spark and the oracle CTE) — completes
-#                             all 22 TPC-H query shapes
-#   streaming_hopping_agg     — NEW: sliding-window stateful agg in
-#                             true streaming form (2 state entries
-#                             per row), complete-mode final state
-#   deterministic_corpus_shuffle — NEW: reproducible training-order
-#                             permutation via the leveled prefix-sum
-#                             (global-window oracle, no global window
-#                             in the plan)
-#   dedup_exact / dedup_simhash / dedup_clusters — rotated BACK in:
-#                             llm/dedup.py changed this round (LSH front
-#                             half factored into lsh_banded_buckets for
-#                             the incremental path); values verified
-#                             unchanged locally, but the policy is
-#                             re-grade on any implementing-source change
-# OUT of the head (r04 green, implementation unchanged since):
-#   pivot_hourly_by_type    — Expand machinery stays graded via
-#                             grouping_sets_report + hopping head rows
-#   unpivot_measure_summary — same Expand family
-#   correlated_above_avg_orders — decorrelated agg+join-back machinery
-#                             stays graded via q15/q18/q21 head rows
-#   streaming_static_enrich — stream-static broadcast machinery stays
-#                             graded via the other five streaming head
-#                             rows
-#   streaming_stream_join   — watermarked two-stream join machinery
-#                             stays graded via the sessionize/dedup/
-#                             watermarked/latest streaming head rows
-#   similarity_ann_lsh      — hyperplane-LSH machinery stays graded
-#                             via similarity_ivf_topk + topk_cosine
-#                             head rows (llm/similarity untouched)
-#   scalar_function_suite   — F-suite machinery pinned; siblings
-#                             datetime_parse_suite / dirty_data TAIL
-#                             pins cover the parse family
-#   tpch_q1_pricing_summary — scan+agg machinery graded via q9/q8 and
-#                             weather_window_agg head rows
-#   tpch_q3_shipping_priority — broadcast-dim + big-join machinery
-#                             graded via q2/q18/q20/q21 head rows
-#   streaming_sessionize    — stateful session machinery pinned by
-#                             test_stateful; dedup/static-enrich-family
-#                             rows r04-green
-#   streaming_watermarked_append — watermark machinery graded r04;
-#                             streaming_window_agg TAIL pin + tests
-#   approx_count_distinct   — HLL-vs-exact certification stays covered
-#                             by the kmv_distinct_sketch TAIL pin and
-#                             its own r04 green row
-#   latency_nearest_rank_percentiles — nearest-rank machinery stays
-#                             graded via the latency_percentiles TAIL
-#                             pin + approx_quantiles certification
-#   streaming_latest_table  — latest-by-key table machinery stays
-#                             graded via the sessionize/dedup/
-#                             watermarked streaming head rows +
-#                             latest_by_offset TAIL pin
-#   tpch_q10_returned_items — join+agg+top-k machinery stays graded via
-#                             the q3/q18/q21 head rows
-#   tpch_q4_semijoin_priority — LEFT SEMI machinery stays graded via the
-#                             q21 head row (semi+anti folded per order)
-#   tpch_q7_volume_shipping — join-chain + year-bucket machinery stays
-#                             graded via the new q8 head row
-#   tpch_q14_promo_revenue  — conditional-ratio aggregate machinery stays
-#                             graded via the new q8 head row
-#   tpch_q22_antijoin_segments — LEFT ANTI machinery stays graded via the
-#                             q21 head row
-#   approx_quantiles_bounded — sketch-quantile machinery stays graded via
-#                             latency_nearest_rank_percentiles +
-#                             approx_count_distinct head rows
-#
-# Round-6 rotation (docs/ROTATION_R6.md; CORRECTNESS_r05.json was a
-# clean 50/50 sweep, so all 20 staged queries graduate). INTO the head
-# from plans/round6_queries.py (formerly next_round.py — every one
-# already DuckDB-verified at sf0.001/0.01/0.1 by the staging tests):
-#   doc_chunk_stride, tfidf_top_terms, funnel_conversion,
-#   cohort_retention, domain_mixture_resample, winsorized_stats,
-#   rolling_7day_active_users, dedup_containment, quality_cdf_normalize,
-#   zorder_layout_scan, ann_recall_certified, bloom_semijoin_pushdown,
-#   streaming_chained_window_agg, dedup_cross_source_matrix,
-#   scd2_dimension_build, group_exact_k_sample, analyze_column_stats,
-#   nullsafe_join_agg, cdc_snapshot_apply, streaming_cdc_latest
-# OUT of the head (all r05 green, implementing source unchanged since —
-# pinned below via TAIL_SOURCE_SHA256):
-#   weather_window_agg_sql  — translation test-pinned; weather_window_agg
-#                             stays in the head
-#   ksql_windowed_table     — sql/ksql.py unchanged; translation layer
-#                             test-pinned + weather head row stays
-#   dedup_exact             — dedup family graded via minhash/incremental
-#                             head rows + NEW containment head row
-#   dedup_simhash           — same family; pigeonhole band machinery
-#                             pinned by test_llm
-#   dedup_clusters          — connected-components machinery pinned;
-#                             keep-best (cluster consumer) stays graded
-#                             via curation head rows
-#   dedup_ngram_jaccard     — exact-Jaccard verify machinery stays graded
-#                             via the NEW dedup_containment head row
-#                             (same lsh_banded_buckets front half +
-#                             array_intersect verify, different metric)
-#   tpch_q18_large_orders   — IN-over-grouped-HAVING semi machinery stays
-#                             graded via q21 head row
-#   tpch_q19_disjunctive_predicates — OR-of-ANDs predicate pushdown stays
-#                             graded via q2/q9/q16/q20 head rows
-#   tpch_q13_customer_distribution — left-outer + histogram-of-counts
-#                             machinery stays graded via q21 (left outer
-#                             folded aggs) + analyze_column_stats (NDV
-#                             histogram shape)
-#   tpch_q15_top_supplier   — reused-view + max-equality cut stays graded
-#                             via q2's min-cost correlated cut head row
-#   hopping_window_agg      — Expand-replication sliding machinery stays
-#                             graded via streaming_hopping_agg (head) and
-#                             the NEW streaming_chained_window_agg row
-#   rank_function_suite     — six ranking fns one-pass; window machinery
-#                             stays graded via scd2_dimension_build /
-#                             group_exact_k_sample / tfidf_top_terms
-#                             head rows (row_number/lag/lead forms)
-#   null_semantics_suite    — three-valued-logic parity stays graded via
-#                             the NEW nullsafe_join_agg head row
-#   grouping_sets_report    — Expand machinery graded via the analyze
-#                             stack reshape + winsorized/cube TAIL pins
-#   linear_interpolation_gapfill — two-sided gap reconstruction machinery
-#                             (lag/lead windows) stays graded via scd2 +
-#                             multiway_timejoin_ffill head rows
-#   pii_scrub_stats         — regexp_replace scrub machinery pinned by
-#                             test_sampling_pii; text family head rows
-#                             stay (quality CDF consumes the same scores)
-#   sequence_packing_manifest — per-(pack, segment) manifest; the
-#                             prefix-sum packing machinery stays graded
-#                             via sequence_packing + token_budget head
-#                             rows
-#   passage_dup_stats       — chunk-grain dup audit machinery stays
-#                             graded via the NEW doc_chunk_stride head
-#                             row (same chunking) + minhash verify row
-#   fuzzy_dedup_levenshtein — prefix-blocked edit-distance machinery
-#                             pinned; blocking join shape graded via
-#                             containment/cross-source head rows
-#   grouped_array_collect   — collect_list/set canonicalization pinned;
-#                             array-HOF machinery stays graded via
-#                             tfidf (explode+agg) + containment
-#                             (array_intersect) head rows
-# Round-7 rotation (docs/ROTATION_R7.md; CORRECTNESS_r06.json was 49/50 —
-# the red `domain_mixture_resample` row STAYS IN THE HEAD for re-grade:
-# root cause was oracle result-typing only (DuckDB HUGEINT/INTEGER vs
-# Spark BIGINT; values identical), fixed by CASTing n_kept/keep_threshold
-# to BIGINT in the oracle, and tools/check_correctness.py now FAILS on
-# any cross-engine type-class drift so the bug class cannot recur).
-# INTO the head from plans/round7_queries.py (formerly next_round.py —
-# every one already DuckDB-verified at sf0.001/0.01/0.1 by the staging
-# tests while staged in round 6):
-#   batch_sessionize, table_diff_reconciliation, merge_on_read_upsert,
-#   weighted_sample_priority, hof_function_suite, json_extract_suite,
-#   range_interval_window, calendar_spine_gapfill, recursive_cte_closure,
-#   aqe_coalesce_partitions, bitmap_day_activity, topk_per_group_ties,
-#   streaming_dropdup_within_watermark, streaming_stream_left_join,
-#   setop_suite, filter_clause_agg, lag_lead_ignore_nulls,
-#   listagg_ordered, posexplode_tokens, try_arithmetic_suite,
-#   ivf_recall_certified, pq_quantization_error, ansi_percentile_suite,
-#   text_normalization_suite, url_parse_suite
-# OUT of the head (all r06 green, implementing source unchanged since —
-# pinned below via TAIL_SOURCE_SHA256):
-#   doc_chunk_stride        — chunking machinery also pinned via the
-#                             passage_dup_stats TAIL row
-#   tfidf_top_terms         — explode+agg+window machinery stays graded
-#                             via the topk_per_group_ties head row
-#   funnel_conversion       — chained key-aligned agg machinery stays
-#   cohort_retention          graded via the batch_sessionize head row
-#   winsorized_stats        — percentile-clamp machinery pinned; the
-#                             nearest-rank family stays TAIL-pinned and
-#                             ansi_percentile_suite grades lerp forms
-#   rolling_7day_active_users — explode-window trick; bitmap_day_activity
-#                             head row grades the same activity algebra
-#   quality_cdf_normalize   — bounded-histogram CDF; equal machinery in
-#                             the still-graded curation head rows
-#   group_exact_k_sample    — row_number cut contrasted by the NEW
-#                             topk_per_group_ties head row
-#   analyze_column_stats    — one-scan stats; stack/unpivot machinery
-#                             TAIL-pinned via unpivot/grouping_sets
-#   nullsafe_join_agg       — null-safe compare machinery stays graded
-#                             via the table_diff_reconciliation head row
-#   multimodal_frame_sample — decode_roundtrip (the hardest multimodal
-#   multimodal_resize         row) stays in the head; llm/multimodal
-#   multimodal_feature_extract  untouched, all three r06 green
-#   tpch_q9_product_profit  — derived-partsupp shapes; q2/q11... q2/q20
-#   tpch_q16_supplier_part_counts  stay graded in the head
-#   tpch_q11_important_stock — same derived-partsupp family; q2/q20 stay
-#   dedup_embedding_cosine  — similarity family graded via topk_cosine +
-#                             NEW ivf_recall_certified head rows
-#   similarity_ivf_topk     — IVF machinery re-graded via the NEW
-#                             ivf_recall_certified head row (same IVF
-#                             top-k inside the certificate join)
-#   streaming_hopping_agg   — sliding stateful form; chained_window +
-#                             weather head rows stay
-#   streaming_dedup_distinct_keys — stateful dedup machinery re-graded
-#                             via the NEW streaming_dropdup_within_
-#                             watermark head row (bounded-state form)
-#   decontam_ngram_overlap  — broadcast shingle-set machinery;
-#                             containment/cross-source stay graded
-#   deterministic_corpus_shuffle — leveled prefix-sum; packing/selection
-#                             head rows share the machinery
-#   tpch_q8_market_share    — join-chain shapes with multiple graded
-#   tpch_q21_waiting_suppliers  siblings still in the head (q2/q20) and
-#                             TAIL-pinned (q3/q5/q7/q10)
-#   cdc_snapshot_apply      — batch fold; NEW merge_on_read_upsert +
-#                             still-graded streaming_cdc_latest grade
-#                             the family
-# Round-8 rotation (docs/ROTATION_R8.md; CORRECTNESS_r07.json was a
-# clean 50/50 sweep). INTO the head from plans/round8_queries.py
-# (formerly next_round.py — every one DuckDB-verified at
-# sf0.001/0.01/0.1 by the staging tests while staged in round 7):
-#   lateral_topn_per_key, sql_macro_suite, variant_extract_suite,
-#   collation_group_suite, groupby_all_unpivot_sql, map_function_suite,
-#   array_algebra_suite, explode_outer_semantics, regexp_suite2,
-#   interval_datetime_suite, sequence_densify_per_key,
-#   hll_bitmap_sketch_suite, ema_dyadic_decay,
-#   mixture_quota_largest_remainder, ann_mrr_certified,
-#   dup_graph_degree_stats, streaming_stream_full_outer_join,
-#   streaming_session_window_agg, asof_tolerance_join,
-#   robust_zscore_applyinpandas, time_weighted_avg,
-#   decimal_arithmetic_suite, hint_join_strategies,
-#   observe_metrics_suite, streaming_session_window_append,
-#   hourly_series_pivot_fold, python_datasource_stream_agg,
-#   python_datasource_geojson_scan, python_datasource_sink_roundtrip,
-#   udtf_chunk_documents, xml_roundtrip_suite, approx_topk_certified,
-#   streaming_observe_metrics
-# (9 staged siblings held back in plans/next_round.py per the rotation
-# plan — 42 staged > 33 free slots: pivot_dynamic_two_pass,
-# width_bucket_histogram, token_length_log_histogram, string_suite2,
-# bitwise_suite, checksum_encoding_suite, ratio_to_report_share,
-# csv_line_codec_suite, inline_struct_explode.)
-# STAYING in the head (not rotated): the flagship rows
-# (weather_window_agg, multiway_timejoin_ffill, dedup_minhash_lsh,
-# similarity_topk_cosine, multimodal_decode_roundtrip,
-# bucketed_orders_lineitem_join, tpch_q2/q20, curation_pipeline,
-# dedup_keep_best, sequence_packing, token_budget_selection,
-# dynamic_partition_pruning_join, streaming_chained_window_agg,
-# scd2_dimension_build, streaming_cdc_latest) and the two rows whose
-# implementing source CHANGED this round (the ADVICE r07 integer-DIV
-# cut fix) and must therefore re-grade: table_diff_reconciliation,
-# merge_on_read_upsert.
-# OUT of the head (all r07 green, implementing source unchanged since —
-# pinned below via TAIL_SOURCE_SHA256):
-#   hof_function_suite      — lambda/HOF machinery re-graded via the
-#   json_extract_suite        map_function_suite / variant_extract_suite
-#                             head rows (same transform/filter family;
-#                             variant grades the JSON path access)
-#   posexplode_tokens       — generator machinery re-graded via the
-#                             explode_outer_semantics head row
-#   try_arithmetic_suite    — ANSI-safe machinery pinned; the
-#                             decimal_arithmetic_suite head row grades
-#                             the exact-arithmetic path
-#   listagg_ordered         — aggregate-modifier machinery (WITHIN
-#   filter_clause_agg         GROUP / FILTER) pinned by tests; the
-#                             collation/groupby_all head rows grade
-#                             fresh aggregate-SQL surface
-#   lag_lead_ignore_nulls   — navigation machinery re-graded via the
-#                             ema_dyadic_decay / time_weighted_avg
-#                             head rows (lag chains / lead intervals)
-#   range_interval_window   — RANGE frame pinned; the time_weighted_avg
-#                             head row grades the time-weighted form
-#   calendar_spine_gapfill  — global sequence() spine; the
-#                             sequence_densify_per_key head row grades
-#                             the per-key spine
-#   recursive_cte_closure   — plan-surface rows, machinery test-pinned;
-#   aqe_coalesce_partitions   hint_join_strategies + observe head rows
-#                             grade fresh plan-assertion surface
-#   bitmap_day_activity     — bitmap algebra re-graded via the
-#                             hll_bitmap_sketch_suite head row
-#   topk_per_group_ties     — top-k machinery re-graded via the
-#   weighted_sample_priority  lateral_topn_per_key head row (same
-#                             rank-cut shape, LATERAL decorrelated)
-#   batch_sessionize        — gaps-and-islands re-graded via the
-#                             streaming_session_window_agg head row's
-#                             batch-gaps oracle
-#   setop_suite             — suite rows with TAIL-pinned machinery;
-#   url_parse_suite           regexp_suite2 + collation head rows grade
-#   text_normalization_suite  adjacent string surface
-#   ansi_percentile_suite   — lerp percentile forms pinned; nearest-rank
-#                             family stays TAIL-pinned
-#   ivf_recall_certified    — certificate family stays graded via the
-#   pq_quantization_error     ann_mrr_certified head row (rank-aware
-#                             form, same LSH/IVF machinery underneath)
-#   streaming_dropdup_within_watermark — streaming dedup/join family
-#   streaming_stream_left_join  keeps the NEW full-outer + session
-#                             head rows (stateful machinery re-graded)
-#   dedup_incremental_vs_corpus — banded-bucket LSH machinery stays
-#   dedup_containment         graded via the dedup_minhash_lsh flagship
-#   dedup_cross_source_matrix head row (same lsh_banded_buckets front
-#                             half; llm/dedup.py untouched this round)
-#   dedup_keep_best         — cluster keep-best; curation_pipeline
-#                             (its consumer) stays in the head
-#   domain_mixture_resample — r07 green after the oracle-typing fix;
-#                             scan-side md5 keep-predicate machinery
-#                             re-graded via the NEW
-#                             mixture_quota_largest_remainder head row
-#   partitioned_write_prune — layout-lever family: 4 of 5 rotate on
-#   range_layout_scan         their r07 green (write-time levers,
-#   zorder_layout_scan        operators/layout.py untouched);
-#   bloom_semijoin_pushdown   dynamic_partition_pruning_join stays in
-#                             the head as the runtime-pruning flagship
-#   ann_recall_certified    — hyperplane-LSH recall certificate; the
-#                             ann_mrr_certified head row grades the
-#                             same index family rank-aware
-# Round-9 rotation (docs/ROTATION_R9.md; CORRECTNESS_r08.json was 47/50
-# — the three reds were the array-output serialization defect, fixed
-# this round). INTO the head from plans/round9_queries.py (formerly
-# next_round.py — every one DuckDB-verified at sf0.001/0.01/0.1 by the
-# staging tests while staged in round 8): all 33 staged queries —
-#   inline_struct_explode, string_suite2, bitwise_suite,
-#   width_bucket_histogram, ratio_to_report_share,
-#   token_length_log_histogram, pivot_dynamic_two_pass,
-#   csv_line_codec_suite, checksum_encoding_suite,
-#   video_mjpeg_frame_extract, sql_scripting_variables,
-#   identifier_parameterized_query, pipe_syntax_suite,
-#   sql_table_function_lateral, json_roundtrip_suite,
-#   ngram_lm_familiarity, exact_substring_spans,
-#   state_store_reader_audit, partition_overwrite_backfill,
-#   schema_evolution_mergeschema, orc_roundtrip_scan,
-#   streaming_foreachbatch_exactly_once,
-#   python_datasource_stream_sink_roundtrip, mapinarrow_token_stats,
-#   aqe_skew_join_split, inmemory_cache_scan, temperature_mixture_quota,
-#   pandas_api_on_spark_agg, stat_crosstab_matrix, luhn_pii_check,
-#   array_mutation_suite, try_function_suite2, char_octet_length_suite
-# STAYING in the head (17 = 50 − 33):
-#   map_function_suite / array_algebra_suite / regexp_suite2 — the r08
-#     RED rows (raw array output columns crashed the driver's hash
-#     comparator); fixed this round by array_join at the query boundary
-#     (the r04 grouped_array_collect precedent) and MUST re-grade
-#   similarity_topk_cosine — r08 flagged a 3.6× bench regression; the
-#     fixed sampler re-measured the mapInPandas twin ~2× FASTER than
-#     codegen at sf0.1 and 10× (llm/similarity.py docstring carries the
-#     numbers), headline unchanged, but the docstring edit voids the
-#     source pin so it re-grades in the head
-#   observe_metrics_suite / streaming_observe_metrics — implementing
-#     source changed this round (streaming/listeners.py pre-pin race
-#     fix, ADVICE r08); policy: re-grade on any implementing-source
-#     change
-#   python_datasource_geojson_scan / python_datasource_stream_agg /
-#   python_datasource_sink_roundtrip — implementing source changed this
-#     round (sources/pyds.py append-sweep fix, ADVICE r08); same policy
-#   weather_window_agg (the reference flagship + entry()),
-#   multiway_timejoin_ffill, dedup_minhash_lsh,
-#   multimodal_decode_roundtrip, sequence_packing,
-#   token_budget_selection, streaming_chained_window_agg — the
-#     reference-parity + LLM-pipeline flagship rows the verdict reads
-#     first
-#   tpch_q3_shipping_priority — rotated BACK in late in round 9: the
-#     plan audit showed Catalyst auto-broadcasting the filtered
-#     lineitem at test SFs (impossible at 100 TB); the fix pins
-#     SHUFFLE_MERGE on the o⋈l join (also measured 1.4× faster
-#     locally), and the implementing-source change voids its TAIL pin.
-#     Its slot comes from curation_pipeline → TAIL (green r05–r08,
-#     source unchanged; keep-best/quality machinery stays covered by
-#     the dedup_minhash_lsh flagship + packing/selection head rows and
-#     the dedup_keep_best / quality TAIL pins)
-# OUT of the head (all r08 green, implementing source unchanged since —
-# pinned below via TAIL_SOURCE_SHA256). The ROTATION_R9 plan held some
-# of these for a second graded round, but graduating all 33 staged rows
-# (the verdict's own top-3 item) costs exactly these slots; each keeps
-# its green r08 row as TAIL evidence:
-#   bucketed_orders_lineitem_join — write-time bucketed co-located join;
-#     zero-Exchange assertion also pinned by test_bucketing
-#   tpch_q2_min_cost_supplier / tpch_q20_potential_promotion — the
-#     derived-partsupp family, green r05–r08 across five siblings
-#   dynamic_partition_pruning_join — runtime-pruning flagship, 4th green
-#     round; layout-lever family fully TAIL-pinned
-#   scd2_dimension_build / streaming_cdc_latest / table_diff_
-#     reconciliation / merge_on_read_upsert — the CDC family, all
-#     re-graded green in r08 after the DIV fix
-#   lateral_topn_per_key — LATERAL decorrelation machinery re-graded via
-#     the sql_table_function_lateral head row
-#   sql_macro_suite — SQL-defined-routine machinery re-graded via the
-#     sql_scripting_variables / identifier_parameterized_query head rows
-#   variant_extract_suite — parse-extract path re-graded via the
-#     json_roundtrip_suite head row; VARIANT machinery type-gate-pinned
-#   collation_group_suite / groupby_all_unpivot_sql — SQL-surface rows;
-#     pipe_syntax_suite + pivot_dynamic_two_pass head rows grade fresh
-#     parser/reshape surface
-#   explode_outer_semantics — Generate family re-graded via the
-#     inline_struct_explode head row
-#   interval_datetime_suite — documented-engine-bug row; datetime
-#     machinery TAIL-pinned broadly, width_bucket head row grades the
-#     binning arithmetic
-#   sequence_densify_per_key — per-key spine; calendar_spine TAIL pin +
-#     the width_bucket_histogram head row
-#   hll_bitmap_sketch_suite — hash-fn surface re-graded via the
-#     checksum_encoding_suite head row; sketch certificates stay via
-#     approx_topk/ann_recall pins
-#   ema_dyadic_decay / time_weighted_avg — navigation/agg machinery;
-#     ratio_to_report_share head row grades the window-agg form
-#   mixture_quota_largest_remainder — largest-remainder machinery
-#     re-graded via the temperature_mixture_quota head row (same
-#     apportion core, alpha-flattened weights)
-#   ann_mrr_certified — rank-aware certificate green r08; the
-#     similarity_topk_cosine head row keeps the family graded (the
-#     similarity.py docstring edit is re-pinned under the
-#     unchanged-semantics rule with the full sweep green)
-#   dup_graph_degree_stats — dup-graph algebra; minhash flagship stays
-#   streaming_stream_full_outer_join / streaming_session_window_agg /
-#   streaming_session_window_append — stateful join/session machinery
-#     keeps three graded siblings (chained window agg head row +
-#     foreachBatch exactly-once + PyDS stream sink graduates)
-#   asof_tolerance_join — as-of machinery pinned by test_timeseries;
-#     joins.py untouched
-#   robust_zscore_applyinpandas — applyInPandas surface; the
-#     mapinarrow_token_stats head row grades the adjacent Arrow boundary
-#   decimal_arithmetic_suite — exact-arithmetic path re-graded via the
-#     try_function_suite2 head row (try_divide/try_to_timestamp forms)
-#   hint_join_strategies — plan-assertion surface re-graded via the
-#     aqe_skew_join_split + inmemory_cache_scan head rows
-#   hourly_series_pivot_fold — pivot fold re-graded via
-#     pivot_dynamic_two_pass (discovered-values form)
-#   udtf_chunk_documents — UDTF surface green r08; chunking machinery
-#     also pinned via doc_chunk_stride/passage TAIL pins
-#   xml_roundtrip_suite — codec family keeps json_roundtrip (head) +
-#     csv_line_codec (head) graded
-#   approx_topk_certified — certificate family; checksum + ann pins
-# Round-10 rotation (docs/ROTATION_R10.md; CORRECTNESS_r09.json was a
-# clean 50/50 sweep — the first zero-red registry in the build). INTO
-# the head from plans/round10_queries.py (formerly next_round.py —
-# every one DuckDB-verified at sf0.001/0.01/0.1 by the staging tests
-# while staged in round 9): all 35 graduates —
-#   bm25_odds_retrieval, interval_coverage_sweep, countmin_heavy_hitters,
-#   merkle_range_digest, acf_lag_autocorr, pareto_frontier_skyline,
-#   geo_nearest_site_join, geohash_bucket_stats,
-#   python_datasource_filter_pushdown, benford_leading_digit,
-#   peak_concurrency_sweep, weighted_median_grouped, binned_ks_statistic,
-#   gini_concentration_by_type, markov_transition_matrix,
-#   udtf_dynamic_schema_analyze, arrow_scalar_udf_suite,
-#   cogroup_applyinpandas_reconcile, applyinarrow_group_stats,
-#   conversation_render_budget, global_peak_concurrency,
-#   json_corrupt_record_handling, ols_trend_by_key, rolling_median_smooth,
-#   grouped_gk_quantiles_certified, quantile_normalization_cross_source,
-#   minhash_estimate_error_certified, decontam_max_span,
-#   pack_composition_audit, collision_probability_suite,
-#   fano_burstiness_by_type, pagerank_dupgraph_3iter, hll_union_reaggregate,
-#   series_shape_signature_buckets, python_datasource_sink_append_audit
-# (8 staged suite siblings held back in plans/next_round.py per the
-# rotation plan — 43 staged > 35 free slots: hof_suite2, map_hof_suite2,
-# struct_field_mutation_suite, like_quantifier_suite,
-# union_missing_columns_suite, named_window_clause_sql,
-# lateral_column_alias_sql, text_format_roundtrip.)
-# STAYING in the head (15 = 50 − 35):
-#   weather_window_agg (the reference flagship + entry()),
-#   multiway_timejoin_ffill, tpch_q3_shipping_priority (post-hint
-#     re-grade green r09, SHUFFLE_MERGE plan keeps it the 100 TB
-#     flagship), dedup_minhash_lsh, multimodal_decode_roundtrip,
-#   sequence_packing, token_budget_selection,
-#   streaming_chained_window_agg — the reference-parity + LLM-pipeline
-#     flagship rows the verdict reads first
-#   video_mjpeg_frame_extract, exact_substring_spans,
-#   ngram_lm_familiarity, state_store_reader_audit,
-#   streaming_foreachbatch_exactly_once,
-#   python_datasource_stream_sink_roundtrip, mapinarrow_token_stats —
-#     the round-9 new-machinery graduates held for a second graded
-#     round per docs/ROTATION_R10.md (and VERDICT r09 ask #6 for the
-#     exactly-once/state-store pair)
-# OUT of the head (all r09 green, implementing source unchanged since —
-# pinned below via TAIL_SOURCE_SHA256):
-#   map_function_suite / array_algebra_suite / regexp_suite2 — the r08
-#     serialization reds re-graded GREEN in r09; the boundary fix is now
-#     pinned and the HOF/regex machinery keeps staged siblings coming
-#     (hof_suite2 / map_hof_suite2 / like_quantifier_suite next round)
-#   similarity_topk_cosine — green r09 after the docstring re-pin; the
-#     ANN certificate family stays TAIL-pinned (ann_mrr/recall) and the
-#     minhash flagship stays in the head
-#   observe_metrics_suite / streaming_observe_metrics — listener
-#     machinery re-graded green r09 after the pre-pin race fix
-#   python_datasource_geojson_scan / python_datasource_stream_agg /
-#   python_datasource_sink_roundtrip — PyDS surface green r09 after the
-#     append-sweep fix; the stream-sink row stays in the head and the
-#     filter-pushdown + sink-append-audit graduates grade fresh PyDS
-#     surface this round
-#   inline_struct_explode, string_suite2, bitwise_suite,
-#   width_bucket_histogram, ratio_to_report_share,
-#   token_length_log_histogram, pivot_dynamic_two_pass,
-#   csv_line_codec_suite, checksum_encoding_suite,
-#   sql_scripting_variables, identifier_parameterized_query,
-#   pipe_syntax_suite, sql_table_function_lateral, json_roundtrip_suite,
-#   partition_overwrite_backfill, schema_evolution_mergeschema,
-#   orc_roundtrip_scan, aqe_skew_join_split, inmemory_cache_scan,
-#   temperature_mixture_quota, pandas_api_on_spark_agg,
-#   stat_crosstab_matrix, luhn_pii_check, array_mutation_suite,
-#   try_function_suite2, char_octet_length_suite — the round-9
-#     graduates, all green r09 first grade, source untouched this
-#     round; their machinery families keep graded siblings in the new
-#     head (SQL-surface → lateral alias/named-window staged siblings,
-#     format family → json_corrupt_record_handling head row, mixture →
-#     pack_composition_audit head row, stats → the analytic-statistics
-#     graduate family)
-# ---------------------------------------------------------------------
-# Round-12 rotation (docs/ROTATION_R11.md, executed round 12 — the
-# rotation round 11 skipped). CORRECTNESS_r11 graded the round-10 head
-# 50/50 green (second green for every row: r10 + r11 graded the same
-# byte-identical head). INTO the head: the 42 round-11 graduates from
-# plans/round11_queries.py (8 round-9 holdover suites first, then the
-# round-10 stagings; 11 suite siblings held back in plans/next_round.py
-# per the holdback priority — their machinery keeps graded siblings in
-# the new head). STAYING: the 8 flagships (weather_window_agg = entry(),
-# multiway_timejoin_ffill, tpch_q3_shipping_priority, dedup_minhash_lsh,
-# multimodal_decode_roundtrip, sequence_packing, token_budget_selection,
-# streaming_chained_window_agg). OUT of the head (all DOUBLE-green
-# r10+r11, implementing source unchanged since — pinned below via
-# TAIL_SOURCE_SHA256):
-#   video_mjpeg_frame_extract, exact_substring_spans,
-#   ngram_lm_familiarity, state_store_reader_audit,
-#   streaming_foreachbatch_exactly_once,
-#   python_datasource_stream_sink_roundtrip, mapinarrow_token_stats —
-#     the round-9 second-rounders; after their second green they TAIL
-#     with double evidence, and the graduating streaming/PyDS/UDTF rows
-#     (streaming_checkpoint_restart_resume, streaming_rocksdb_state_store,
-#     streaming_stateful_topk_per_key, python_datasource_simple_stream,
-#     udtf_table_arg_partition_by) keep every machinery family graded
-#   bm25_odds_retrieval, ngram-adjacent text rows — text machinery keeps
-#     bpe_pair_merge_candidates + ngram_novelty_growth head rows
-#   interval_coverage_sweep, peak_concurrency_sweep,
-#   global_peak_concurrency — the sweep family TAILs whole; its
-#     two-level prefix-sum machinery is the pattern the graduating
-#     rows reuse and tests pin
-#   countmin_heavy_hitters, merkle_range_digest, benford_leading_digit,
-#   geo_nearest_site_join, geohash_bucket_stats — single-purpose
-#     certificate/spatial machinery, first green r10 + second r11,
-#     test-pinned
-#   acf_lag_autocorr, ols_trend_by_key, fano_burstiness_by_type,
-#   binned_ks_statistic, gini_concentration_by_type,
-#   markov_transition_matrix, weighted_median_grouped,
-#   rolling_median_smooth, pareto_frontier_skyline,
-#   series_shape_signature_buckets — the analytic-statistics family;
-#     rolling_correlation_24h + mad_robust_outliers keep framed/robust
-#     stats graded via the staged holdback round while the graduating
-#     regr_agg_suite grades the ANSI aggregate surface
-#   udtf_dynamic_schema_analyze, arrow_scalar_udf_suite,
-#   cogroup_applyinpandas_reconcile, applyinarrow_group_stats —
-#     Python-eval surface; udtf_table_arg_partition_by graduates the
-#     UDTF TABLE-arg form, stateful top-k grades applyInPandasWithState
-#   conversation_render_budget, json_corrupt_record_handling —
-#     SQL/format surface with graduating siblings
-#     (csv_quoted_multiline_roundtrip, text_format_roundtrip)
-#   grouped_gk_quantiles_certified, quantile_normalization_cross_source,
-#   minhash_estimate_error_certified, collision_probability_suite,
-#   hll_union_reaggregate — sketch/certificate family; bitmap_distinct
-#     functions graduates the exact mergeable-distinct form
-#   decontam_max_span, pack_composition_audit — LLM-pipeline rows with
-#     the flagship pair (sequence_packing, token_budget_selection)
-#     staying and span_corruption_mask_plan/length_bucketed_batching
-#     graduating
-#   pagerank_dupgraph_3iter — iterative-graph recipe stays graded via
-#     the graduating dupgraph_triangle_count + kcore_dupgraph_3peel +
-#     pca_power_iteration_1d (same localCheckpoint pattern)
-#   python_datasource_filter_pushdown, python_datasource_sink_append_audit
-#     — PyDS V2 surface; python_datasource_simple_stream graduates the
-#     remaining reader form
-# ---------------------------------------------------------------------
-# Round-13 rotation (docs/ROTATION_R12.md). CORRECTNESS_r12 graded the
-# round-11-graduate head 50/50 green — zero reds, so the full slot plan
-# executes. INTO the head: the 42 round-12 graduates from
-# plans/round12_queries.py (the 11 round-11 holdbacks first — they
-# waited two rounds — then the round-12 stagings; 12 suite siblings held
-# back in plans/next_round.py per the holdback priority — their
-# machinery keeps graded siblings in the new head). STAYING: the 8
-# flagships (weather_window_agg = entry(), multiway_timejoin_ffill,
-# tpch_q3_shipping_priority, dedup_minhash_lsh,
-# multimodal_decode_roundtrip, sequence_packing, token_budget_selection,
-# streaming_chained_window_agg). OUT of the head (all green r12 first
-# grade, implementing source unchanged since — pinned below via
-# TAIL_SOURCE_SHA256):
-#   hof_suite2, map_hof_suite2, struct_field_mutation_suite,
-#   like_quantifier_suite, named_window_clause_sql,
-#   lateral_column_alias_sql, union_missing_columns_suite,
-#   text_format_roundtrip — the round-9 holdover suites, green r12
-#     after their two-round wait; HOF/SQL-surface machinery keeps the
-#     graduating execute_immediate_sql / order_by_all_offset_sql /
-#     string_format_suite / xpath+mask staged siblings coming
-#   null_aware_antijoin_notin, using_join_full_coalesce,
-#   correlated_nonequi_exists, struct_equality_join — relational-
-#     semantics rows; join machinery keeps tpch_q12/q17 graduating plus
-#     the q3 flagship and the full TPC-H TAIL family
-#   regr_agg_suite — ANSI regression aggregates; the graduating
-#     score_calibration_bins / chi_square / neyman rows keep the
-#     analytic-aggregate family graded
-#   bpe_pair_merge_candidates, ngram_novelty_growth,
-#   vocab_dyadic_rank_mass — text-statistics rows; the graduating
-#     zipf_tail_mass / oov_rate / token_pmi / lang_id_confusion rows
-#     grade the same explode+agg machinery fresh
-#   streaming_dedup_then_window, streaming_file_sink_partitioned,
-#   streaming_checkpoint_restart_resume, streaming_rocksdb_state_store,
-#   streaming_stateful_topk_per_key, session_window_dynamic_gap —
-#     streaming state family; the streaming_chained_window_agg flagship
-#     stays graded and every stateful form here carries its r12 green +
-#     witnesses; avro_codec_roundtrip_batch graduates the codec leg
-#   hidden_file_metadata_scan, binaryfile_source_scan,
-#   csv_quoted_multiline_roundtrip, clustered_write_sorted_runs,
-#   window_group_limit_pushdown — source/layout/plan-surface rows;
-#     compression_codec_matrix (staged holdback) + the graduating
-#     aqe_runtime_broadcast_conversion keep plan/layout surface coming
-#   udtf_table_arg_partition_by, python_datasource_simple_stream —
-#     Python-eval/PyDS surface, green r12; family broadly TAIL-pinned
-#     (arrow/udtf/cogroup/applyinarrow + 6 PyDS rows)
-#   pca_power_iteration_1d, semdedup_quantized_prune,
-#   kmeans_lloyd_step_quantized, dupgraph_triangle_count,
-#   kcore_dupgraph_3peel, dedup_survivorship_merge — the iterative/
-#     graph family, green r12 with numpy witnesses + the 100M-row scale
-#     sweep recorded; labelprop_communities_2iter graduates the
-#     synchronized-propagation form on the same dup graph
-#   running_distinct_users, bitmap_distinct_functions — mergeable-
-#     distinct family; rolling_24h_sliding_distinct graduates the exact
-#     sliding-window form
-#   asof_nearest_join — as-of machinery; feature_store_pit_join
-#     graduates the chained multi-grain form (DuckDB ASOF oracle)
-#   mad_robust_outliers, rolling_correlation_24h — robust/framed stats;
-#     the graduating interarrival/ohlc/nth_value rows grade the framed
-#     window machinery fresh
-#   span_corruption_mask_plan, length_bucketed_batching — LLM-pipeline
-#     rows with the flagship pair staying and the graduating
-#     curriculum_token_budget_phases / doc_span_interval_union /
-#     mixture_epoch_repeat_planner rows grading the same family
-# ------------------------------------------------------------------
-# Round-14 rotation (docs/ROTATION_R13.md): CORRECTNESS_r13 was 50/50
-# green, so the full round-12 cohort (head rows 8-49) moves to TAIL and
-# 42 of the 63 staged rows graduate (plans/round13_queries.py) — the 12
-# round-12 holdbacks first (two rounds waited), then the round-13
-# stagings by the slot plan. Departing rows, with the sibling/graduate
-# that keeps their machinery under fresh grade:
-#   agg_breadth_suite, score_calibration_bins, dataframe_transpose_suite,
-#   melt_api_reshape, string_format_suite, order_by_all_offset_sql,
-#   execute_immediate_sql, nth_value_window_suite,
-#   interarrival_dyadic_histogram, ohlc_hourly_bars,
-#   id_sequence_gap_audit — the round-11 holdback breadth/reshape/
-#     window-frame rows, green r13; machinery broadly TAIL-pinned
-#     (melt/transpose/stack family, window suites) and the graduating
-#     mode_median/calendar/datetime_constructor suites re-grade the
-#     scalar/agg breadth surface fresh
-#   tpch_q12_shipmode_priority, tpch_q17_small_quantity_revenue — the
-#     last two TPC-H shapes, green r13; all 22 TPC-H rows now carry a
-#     graded round and the q1/q3 flagship+TAIL family stays pinned
-#   heavy_hitters_misra_gries_certified, tablesample_repeatable_certified,
-#   chi_square_uniformity_by_type, neyman_allocation_plan — certificate
-#     rows, green r13; the graduating reservoir_bottomk_certified /
-#     class_balanced_undersample / bloom_prefilter_fpr_certified and
-#     auc/chi2 siblings keep the certificate discipline graded
-#   zipf_tail_mass_by_source, oov_rate_by_source, token_pmi_top_pairs,
-#   lang_id_confusion_matrix — text-statistics rows, green r13; the
-#     graduating suffix_lcp_repeat_stats / repeated_span_cut_plan /
-#     setsim_prefix_filter_join grade the text family's heavier members
-#   mixture_epoch_repeat_planner, quality_threshold_sweep_confusion,
-#   curriculum_token_budget_phases, doc_span_interval_union — LLM
-#     curation rows, green r13; mixture_schedule_manifest graduates the
-#     planner family and the flagship packing pair stays in the head
-#   feature_store_pit_join — PIT join, green r13; scd2_temporal_lookup_join
-#     graduates the same as-of machinery under a native-ASOF oracle
-#   embedding_prefix_energy, hard_negative_mining_topk,
-#   embedding_norm_hof_vs_explode — embedding rows, green r13; the
-#     graduating pairwise_energy / kmeanspp_d2 / multi_probe_lsh /
-#     ivf_cell_balance rows re-grade the vector machinery
-#   chi_square_uniformity_by_type (listed above), ivm_aggregate_delta_merge,
-#   global_row_index_two_level, interval_overlap_join_buckets,
-#   aqe_runtime_broadcast_conversion — scale-pattern rows, green r13;
-#     bucketed_colocated_join_audit / equi_depth_partition_bounds /
-#     cc_hash_to_min_pointer_jump graduate the scale-pattern family
-#   dq_expectation_audit, right_to_erasure_cascade — ops/compliance,
-#     green r13; subject_access_export graduates the compliance family
-#   avro_codec_roundtrip_batch — codec row, green r13; S2/S3 machinery
-#     test-pinned (tests/test_kafka_avro.py) and codec source unchanged
-#   time_to_convert_dyadic, in_session_conversion_rate,
-#   rolling_24h_sliding_distinct — product-analytics rows, green r13;
-#     stickiness_dau_mau / event_path_trigrams / cohort_ltv_accumulation
-#     / rfm_segment_counts graduate the family
-#   labelprop_communities_2iter — graph row, green r13; the graduating
-#     cc_hash_to_min_pointer_jump grades the dup-graph family's
-#     convergence machinery fresh
-#   blocklist_term_scan — green r13; blocklist_aho_corasick_stage
-#     graduates the automaton twin pinned value-equal to this row
-#   split_leakage_near_dup_audit — green r13; setsim_prefix_filter_join
-#     and the TAIL-pinned decontam rows keep cross-split LSH graded
-# ------------------------------------------------------------------
-# Round-15 rotation (docs/ROTATION_R14.md): CORRECTNESS_r14 was 50/50
-# green, so the full round-13 cohort (head rows 8-49) moves to TAIL and
-# ALL 36 staged rows graduate (plans/round14_queries.py) — the staging
-# queue drains: 21 round-13 holdbacks first (two rounds waited), then
-# the 15 round-14 stagings. New head = 8 flagships + 36 graduates + the
-# round-15 slot-fillers. Departing rows, with the sibling/graduate that
-# keeps their machinery under fresh grade:
-#   xpath_scalar_suite, mode_median_suite, calendar_function_suite,
-#   datetime_constructor_suite, mask_crypto_suite,
-#   array_sort_comparator_suite, grouping_id_bitmask_report — scalar/
-#     SQL-breadth rows, green r14; the graduating null_scalar_breadth_
-#     suite and csv_escape_quote_matrix re-grade the breadth surface
-#   label_inverse_frequency_weights, mixture_schedule_manifest,
-#   class_balanced_undersample, equi_depth_partition_bounds — curation
-#     planner rows, green r14; waterfill_budget_allocation /
-#     sft_loss_mask_plan / curation_pipeline_v2_composed graduate the
-#     planner family with the flagship packing pair still in the head
-#   compression_codec_matrix — write-matrix row, green r14; codec
-#     machinery test-pinned, audio_decimate_boxcar grades the codec path
-#   event_type_affinity_cosine, lorenz_concentration_deciles,
-#   periodicity_detector_planted, max_drawdown_summary,
-#   stickiness_dau_mau, event_path_trigrams, rfm_segment_counts,
-#   cohort_ltv_accumulation — analytics rows, green r14; the graduating
-#     cusum_drift_flags / delta_sign_runlength_stats /
-#     monthly_revenue_mom_yoy / transition_dwell_matrix /
-#     order_to_ship_leadtime_histogram / attribution_last_touch_windowed
-#     re-grade the time-series + product-analytics families
-#   blocklist_aho_corasick_stage — green r14; blocklist machinery stays
-#     TAIL-pinned (blocklist_term_scan) and the automaton twin is
-#     value-pinned by tests
-#   reservoir_bottomk_certified, auc_rank_sum_exact — certificate rows,
-#     green r14; weighted_bottomk_priority_sample / cohens_kappa_exact /
-#     average_precision_exact / macro_f1_exact graduate the sampling +
-#     evaluation certificate families
-#   pairwise_energy_sufficient_stats, knn_loo_label_accuracy,
-#   kmeanspp_d2_seeding_derandomized, ivf_cell_balance_audit,
-#   multi_probe_lsh_recall_certified — embedding rows, green r14; the
-#     graduating farthest_point_init_quantized /
-#     multi_probe_recall_at_k_certified / jl_projection_distance_
-#     certified / bbit_minwise_estimate_on_candidates re-grade the
-#     vector machinery
-#   lsh_band_sensitivity_audit, suffix_lcp_repeat_stats,
-#   cc_hash_to_min_pointer_jump, setsim_prefix_filter_join,
-#   repeated_span_cut_plan, sentence_chunk_greedy_fold — dedup/text
-#     depth rows, green r14; longest_repeated_substring_extract /
-#     local_clustering_coefficient / graph_2hop_degree_sum /
-#     gopher_repetition_rules graduate the same families (the flagship
-#     dedup_minhash_lsh stays in the head)
-#   scd2_temporal_lookup_join — green r14; as-of family broadly
-#     TAIL-pinned (asof_nearest_join, asof_tolerance_join,
-#     feature_store_pit_join)
-#   subject_access_export — compliance row, green r14;
-#     data_retention_expiry_plan graduates the family
-#   streaming_watermark_late_drop, streaming_outer_join_null_emission,
-#   streaming_dedup_within_watermark_reemit,
-#   streaming_semi_join_first_match — green r14, but STAY IN THE HEAD
-#     for re-grade: the round-15 fixture-dir cleanup (try/finally
-#     rmtree after the memory sink materializes) touched their
-#     implementing source, voiding the r14 evidence under the pin
-#     policy — they take 4 of the 6 spare grading slots
-#   bucketed_colocated_join_audit, bloom_prefilter_fpr_certified —
-#     scale-pattern rows, green r14; decontam_bloom_prefilter_certified
-#     and the bucketing TAIL pins keep the patterns graded
-# ------------------------------------------------------------------
-# ------------------------------------------------------------------
-# Round-16 rotation (docs/ROTATION_R15.md, executed round 16):
-# CORRECTNESS_r15 was 50/50 green, so all 25 staged rows graduate
-# (plans/round16_queries.py, formerly next_round.py) and 40 of the 42
-# non-flagship round-15 head rows move to TAIL. Two round-15 head rows
-# STAY for re-grade because this round edited their comparison
-# semantics per ADVICE r15 (their r15 evidence is void under the pin
-# policy): psi_drift_bins_exact (doubled-offset integer midpoint) and
-# temporal_split_straddle_audit (event_id tiebreak in the session-id
-# running sum). Eight streaming rows come OUT of TAIL for a free
-# re-grade, resolving the ADVICE r15 pin-policy finding that their
-# fingerprints were re-pinned after the round-15 auto-checkpoint
-# rmtree edit (a runtime-behavior change): streaming_window_agg,
-# streaming_update_mode_final, streaming_sessionize,
-# streaming_rocksdb_state_store, streaming_stateful_topk_per_key,
-# streaming_cdc_latest, streaming_dedup_then_window,
-# python_datasource_stream_agg — chosen to cover every changed helper
-# path (run_to_memory availableNow, update-mode memory sink, session
-# windows, RocksDB provider, stateful topk, CDC latest, dedup+window
-# chain, Python DataSource streaming). The remaining re-pinned
-# streaming TAIL rows ride the rationale recorded in
-# docs/ROTATION_R16.md: the rmtree runs strictly AFTER the memory sink
-# materializes, touches only anonymous AUTO-created checkpoint dirs,
-# and is unobservable in any returned DataFrame; the 8 re-grades plus
-# the 4 round-15 late-drop re-grades exercise those exact lines under
-# a driver verdict. Remaining free slots are filled by the round-16
-# slot-filler rows in plans/round16_queries.py (see ROTATION_R16.md).
-# ------------------------------------------------------------------
-# Round-17 rotation (docs/ROTATION_R17.md; CORRECTNESS_r16 50/50
-# green, so no red stays for re-grade). INTO the head:
-#   26 of the 27 staged rows graduate (plans/round17_queries.py,
-#     formerly next_round.py; each 3-SF oracle-green, vanilla-swept,
-#     second-witnessed) — the 27th, team_draft_interleave_k6_generated,
-#     is HELD one round in the refilled staging area: its slot funds
-#     the foreachBatch fixture re-grade below, and its machinery is
-#     graded this round via the suite sibling
-#     team_draft_interleave_preference (same coin/draft scheme, k=4).
-#   The 15 remaining auto-checkpoint streaming TAIL rows come out of
-#     TAIL for their free re-grade (python_datasource_simple_stream,
-#     streaming_checkpoint_restart_resume,
-#     streaming_dedup_distinct_keys,
-#     streaming_dropdup_within_watermark, streaming_hopping_agg,
-#     streaming_latest_table, streaming_observe_metrics,
-#     streaming_session_window_agg, streaming_session_window_append,
-#     streaming_static_enrich, streaming_stream_full_outer_join,
-#     streaming_stream_join, streaming_stream_left_join,
-#     streaming_union_window_agg, streaming_watermarked_append) —
-#     with the 8 re-graded in r16, all 23 re-pinned rows then hold
-#     post-rmtree driver verdicts, retiring the ADVICE r15 pin-policy
-#     item completely.
-#   streaming_foreachbatch_exactly_once — its fixture-hygiene fix
-#     (materialize-then-rmtree, VERDICT r16 ask #4) voids its pin, so
-#     it re-grades in the head.
-# OUT of the head: the 42 non-flagship round-16 head rows below (the
-# 27 round-16 graduates + 2 ADVICE re-grades + 8 streaming re-grades
-# + 7 slot-fillers minus the 8 flagships that stay), every one green
-# in CORRECTNESS_r16 with implementing source unchanged since, pinned
-# via TAIL_SOURCE_SHA256; machinery coverage rationale per family in
-# docs/ROTATION_R17.md.
-# ------------------------------------------------------------------
-# Round-18 rotation (optimization round; VERDICT r17 "Next round" #1).
-# INTO the head, for a fresh driver verdict:
-#   6 of the 14 streaming rows whose pins were staled by the 8840ba1
-#     state-partition change landing AFTER the r17 pin regeneration
-#     (streaming_cdc_latest, python_datasource_stream_agg,
-#     streaming_dedup_then_window, streaming_stateful_topk_per_key,
-#     streaming_rocksdb_state_store,
-#     streaming_union_multiple_watermarks) — the remaining 8 were
-#     re-graded locally (tools/check_correctness.py green at
-#     sf0.001/0.01/0.1 against the new pipeline.py) and re-pinned.
-#   curation_pipeline_v4_composed — its sentence-fold stage is
-#     optimized this round (guide §4), so it re-grades in the head
-#     rather than riding a re-pin.
-# OUT of the head: 7 round-17 head rows, every one green in
-# CORRECTNESS_r17 with implementing source unchanged since
-# (theil_sen_slope_exact, benjamini_hochberg_fdr_stepup,
-# benjamini_yekutieli_fdr_exact, mcnemar_paired_exact,
-# kruskal_wallis_rank_exact, wasserstein_1d_histogram_exact,
-# capture_recapture_chapman_estimate).
-# ------------------------------------------------------------------
-TAIL: tuple[str, ...] = (
-    "theil_sen_slope_exact",
-    "benjamini_hochberg_fdr_stepup",
-    "benjamini_yekutieli_fdr_exact",
-    "mcnemar_paired_exact",
-    "kruskal_wallis_rank_exact",
-    "wasserstein_1d_histogram_exact",
-    "capture_recapture_chapman_estimate",
-    "sequence_packing",
-    "token_budget_selection",
-    "streaming_chained_window_agg",
-    "temporal_split_straddle_audit",
-    "psi_drift_bins_exact",
-    "graph_pregel_superstep2",
-    "curation_pipeline_v3_composed",
-    "pav_isotonic_calibration_binned",
-    "kendall_tau_topk_exact",
-    "shapley_attribution_exact",
-    "bigram_draft_acceptance_rate",
-    "prefix_cache_hit_mass",
-    "k_anonymity_risk_audit",
-    "bootstrap_ci_daily_mean",
-    "join_cardinality_histogram_estimate",
-    "rolling_origin_backtest_folds",
-    "dpo_margin_pair_mining",
-    "join_cardinality_skew_twin",
-    "reciprocal_rank_fusion_exact",
-    "cdc_chunk_dedup_mass",
-    "shapley_sampled_permutations_certified",
-    "fagin_ta_topk_certified",
-    "err_exact_dyadic",
-    "kmv_intersection_estimate_certified",
-    "padding_waste_sorted_vs_fifo",
-    "conformal_interval_coverage_exact",
-    "pinball_loss_exact",
-    "mmr_diversified_top3_exact",
-    "successive_halving_plan",
-    "l_diversity_risk_audit",
-    "join_cardinality_mg_sidecar_estimate",
-    "early_stopping_patience_plan",
-    "dow_seasonal_median_residuals",
-    "brier_reliability_bins_exact",
-    "mmr_diversified_topk_weighted",
-    "streaming_watermark_late_drop",
-    "streaming_outer_join_null_emission",
-    "streaming_dedup_within_watermark_reemit",
-    "streaming_semi_join_first_match",
-    "cusum_drift_flags",
-    "delta_sign_runlength_stats",
-    "stratified_kfold_assignment",
-    "farthest_point_init_quantized",
-    "attribution_last_touch_windowed",
-    "null_scalar_breadth_suite",
-    "csv_escape_quote_matrix",
-    "monthly_revenue_mom_yoy",
-    "longest_repeated_substring_extract",
-    "weighted_bottomk_priority_sample",
-    "streaming_session_window_late_drop",
-    "transition_dwell_matrix",
-    "streaming_dynamic_gap_session_late_drop",
-    "multi_probe_recall_at_k_certified",
-    "order_to_ship_leadtime_histogram",
-    "token_tv_distance_matrix",
-    "chi2_independence_contingency",
-    "local_clustering_coefficient",
-    "kmv_sketch_union_merge_certified",
-    "skyline_pareto_frontier",
-    "streaming_full_outer_join_both_nulls",
-    "gopher_repetition_rules",
-    "cohens_kappa_exact",
-    "waterfill_budget_allocation",
-    "graph_2hop_degree_sum",
-    "data_retention_expiry_plan",
-    "decontam_bloom_prefilter_certified",
-    "bbit_minwise_estimate_on_candidates",
-    "audio_decimate_boxcar",
-    "jl_projection_distance_certified",
-    "sft_loss_mask_plan",
-    "curation_pipeline_v2_composed",
-    "rendezvous_shard_assignment_certified",
-    "average_precision_exact",
-    "macro_f1_exact",
-    "gk_summary_union_merge_certified",
-    "xpath_scalar_suite",
-    "mode_median_suite",
-    "calendar_function_suite",
-    "label_inverse_frequency_weights",
-    "datetime_constructor_suite",
-    "mask_crypto_suite",
-    "compression_codec_matrix",
-    "event_type_affinity_cosine",
-    "lorenz_concentration_deciles",
-    "periodicity_detector_planted",
-    "blocklist_aho_corasick_stage",
-    "mixture_schedule_manifest",
-    "max_drawdown_summary",
-    "stickiness_dau_mau",
-    "event_path_trigrams",
-    "rfm_segment_counts",
-    "equi_depth_partition_bounds",
-    "cohort_ltv_accumulation",
-    "reservoir_bottomk_certified",
-    "class_balanced_undersample",
-    "auc_rank_sum_exact",
-    "pairwise_energy_sufficient_stats",
-    "knn_loo_label_accuracy",
-    "lsh_band_sensitivity_audit",
-    "suffix_lcp_repeat_stats",
-    "cc_hash_to_min_pointer_jump",
-    "ivf_cell_balance_audit",
-    "scd2_temporal_lookup_join",
-    "array_sort_comparator_suite",
-    "grouping_id_bitmask_report",
-    "subject_access_export",
-    "kmeanspp_d2_seeding_derandomized",
-    "multi_probe_lsh_recall_certified",
-    "repeated_span_cut_plan",
-    "setsim_prefix_filter_join",
-    "bucketed_colocated_join_audit",
-    "sentence_chunk_greedy_fold",
-    "bloom_prefilter_fpr_certified",
-    "agg_breadth_suite",
-    "score_calibration_bins",
-    "dataframe_transpose_suite",
-    "melt_api_reshape",
-    "string_format_suite",
-    "order_by_all_offset_sql",
-    "execute_immediate_sql",
-    "nth_value_window_suite",
-    "interarrival_dyadic_histogram",
-    "ohlc_hourly_bars",
-    "id_sequence_gap_audit",
-    "tpch_q12_shipmode_priority",
-    "tpch_q17_small_quantity_revenue",
-    "heavy_hitters_misra_gries_certified",
-    "tablesample_repeatable_certified",
-    "zipf_tail_mass_by_source",
-    "oov_rate_by_source",
-    "mixture_epoch_repeat_planner",
-    "quality_threshold_sweep_confusion",
-    "feature_store_pit_join",
-    "token_pmi_top_pairs",
-    "chi_square_uniformity_by_type",
-    "ivm_aggregate_delta_merge",
-    "embedding_prefix_energy",
-    "hard_negative_mining_topk",
-    "doc_span_interval_union",
-    "global_row_index_two_level",
-    "dq_expectation_audit",
-    "right_to_erasure_cascade",
-    "curriculum_token_budget_phases",
-    "avro_codec_roundtrip_batch",
-    "interval_overlap_join_buckets",
-    "lang_id_confusion_matrix",
-    "aqe_runtime_broadcast_conversion",
-    "time_to_convert_dyadic",
-    "neyman_allocation_plan",
-    "rolling_24h_sliding_distinct",
-    "embedding_norm_hof_vs_explode",
-    "in_session_conversion_rate",
-    "labelprop_communities_2iter",
-    "blocklist_term_scan",
-    "split_leakage_near_dup_audit",
-    "hof_suite2",
-    "struct_field_mutation_suite",
-    "named_window_clause_sql",
-    "like_quantifier_suite",
-    "text_format_roundtrip",
-    "map_hof_suite2",
-    "union_missing_columns_suite",
-    "lateral_column_alias_sql",
-    "null_aware_antijoin_notin",
-    "using_join_full_coalesce",
-    "correlated_nonequi_exists",
-    "regr_agg_suite",
-    "bpe_pair_merge_candidates",
-    "ngram_novelty_growth",
-    "streaming_file_sink_partitioned",
-    "hidden_file_metadata_scan",
-    "udtf_table_arg_partition_by",
-    "session_window_dynamic_gap",
-    "pca_power_iteration_1d",
-    "running_distinct_users",
-    "struct_equality_join",
-    "semdedup_quantized_prune",
-    "asof_nearest_join",
-    "mad_robust_outliers",
-    "dupgraph_triangle_count",
-    "vocab_dyadic_rank_mass",
-    "kcore_dupgraph_3peel",
-    "binaryfile_source_scan",
-    "csv_quoted_multiline_roundtrip",
-    "span_corruption_mask_plan",
-    "length_bucketed_batching",
-    "kmeans_lloyd_step_quantized",
-    "bitmap_distinct_functions",
-    "window_group_limit_pushdown",
-    "rolling_correlation_24h",
-    "clustered_write_sorted_runs",
-    "dedup_survivorship_merge",
-    "video_mjpeg_frame_extract",
-    "exact_substring_spans",
-    "ngram_lm_familiarity",
-    "state_store_reader_audit",
-    "python_datasource_stream_sink_roundtrip",
-    "mapinarrow_token_stats",
-    "bm25_odds_retrieval",
-    "interval_coverage_sweep",
-    "countmin_heavy_hitters",
-    "merkle_range_digest",
-    "acf_lag_autocorr",
-    "pareto_frontier_skyline",
-    "geo_nearest_site_join",
-    "geohash_bucket_stats",
-    "python_datasource_filter_pushdown",
-    "benford_leading_digit",
-    "peak_concurrency_sweep",
-    "weighted_median_grouped",
-    "binned_ks_statistic",
-    "gini_concentration_by_type",
-    "markov_transition_matrix",
-    "udtf_dynamic_schema_analyze",
-    "arrow_scalar_udf_suite",
-    "cogroup_applyinpandas_reconcile",
-    "applyinarrow_group_stats",
-    "conversation_render_budget",
-    "global_peak_concurrency",
-    "json_corrupt_record_handling",
-    "ols_trend_by_key",
-    "rolling_median_smooth",
-    "grouped_gk_quantiles_certified",
-    "quantile_normalization_cross_source",
-    "minhash_estimate_error_certified",
-    "decontam_max_span",
-    "pack_composition_audit",
-    "collision_probability_suite",
-    "fano_burstiness_by_type",
-    "pagerank_dupgraph_3iter",
-    "hll_union_reaggregate",
-    "series_shape_signature_buckets",
-    "python_datasource_sink_append_audit",
-    "similarity_topk_cosine",
-    "map_function_suite",
-    "array_algebra_suite",
-    "regexp_suite2",
-    "observe_metrics_suite",
-    "python_datasource_geojson_scan",
-    "python_datasource_sink_roundtrip",
-    "inline_struct_explode",
-    "string_suite2",
-    "bitwise_suite",
-    "width_bucket_histogram",
-    "ratio_to_report_share",
-    "token_length_log_histogram",
-    "pivot_dynamic_two_pass",
-    "csv_line_codec_suite",
-    "checksum_encoding_suite",
-    "sql_scripting_variables",
-    "identifier_parameterized_query",
-    "pipe_syntax_suite",
-    "sql_table_function_lateral",
-    "json_roundtrip_suite",
-    "partition_overwrite_backfill",
-    "schema_evolution_mergeschema",
-    "orc_roundtrip_scan",
-    "aqe_skew_join_split",
-    "inmemory_cache_scan",
-    "temperature_mixture_quota",
-    "pandas_api_on_spark_agg",
-    "stat_crosstab_matrix",
-    "luhn_pii_check",
-    "array_mutation_suite",
-    "try_function_suite2",
-    "char_octet_length_suite",
-    "bucketed_orders_lineitem_join",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q20_potential_promotion",
-    "dynamic_partition_pruning_join",
-    "scd2_dimension_build",
-    "table_diff_reconciliation",
-    "merge_on_read_upsert",
-    "lateral_topn_per_key",
-    "sql_macro_suite",
-    "variant_extract_suite",
-    "collation_group_suite",
-    "groupby_all_unpivot_sql",
-    "explode_outer_semantics",
-    "interval_datetime_suite",
-    "sequence_densify_per_key",
-    "hll_bitmap_sketch_suite",
-    "ema_dyadic_decay",
-    "mixture_quota_largest_remainder",
-    "ann_mrr_certified",
-    "dup_graph_degree_stats",
-    "asof_tolerance_join",
-    "robust_zscore_applyinpandas",
-    "time_weighted_avg",
-    "decimal_arithmetic_suite",
-    "hint_join_strategies",
-    "hourly_series_pivot_fold",
-    "udtf_chunk_documents",
-    "xml_roundtrip_suite",
-    "approx_topk_certified",
-    "hof_function_suite",
-    "json_extract_suite",
-    "posexplode_tokens",
-    "try_arithmetic_suite",
-    "listagg_ordered",
-    "filter_clause_agg",
-    "lag_lead_ignore_nulls",
-    "range_interval_window",
-    "calendar_spine_gapfill",
-    "recursive_cte_closure",
-    "aqe_coalesce_partitions",
-    "bitmap_day_activity",
-    "topk_per_group_ties",
-    "weighted_sample_priority",
-    "batch_sessionize",
-    "setop_suite",
-    "url_parse_suite",
-    "text_normalization_suite",
-    "ansi_percentile_suite",
-    "ivf_recall_certified",
-    "pq_quantization_error",
-    "dedup_incremental_vs_corpus",
-    "dedup_containment",
-    "dedup_cross_source_matrix",
-    "dedup_keep_best",
-    "domain_mixture_resample",
-    "partitioned_write_prune",
-    "range_layout_scan",
-    "zorder_layout_scan",
-    "bloom_semijoin_pushdown",
-    "ann_recall_certified",
-    "doc_chunk_stride",
-    "tfidf_top_terms",
-    "funnel_conversion",
-    "cohort_retention",
-    "winsorized_stats",
-    "rolling_7day_active_users",
-    "quality_cdf_normalize",
-    "group_exact_k_sample",
-    "analyze_column_stats",
-    "nullsafe_join_agg",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "multimodal_feature_extract",
-    "tpch_q9_product_profit",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q11_important_stock",
-    "dedup_embedding_cosine",
-    "similarity_ivf_topk",
-    "decontam_ngram_overlap",
-    "deterministic_corpus_shuffle",
-    "tpch_q8_market_share",
-    "tpch_q21_waiting_suppliers",
-    "cdc_snapshot_apply",
-    "weather_window_agg_sql",
-    "ksql_windowed_table",
-    "dedup_exact",
-    "dedup_simhash",
-    "dedup_clusters",
-    "dedup_ngram_jaccard",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_predicates",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "hopping_window_agg",
-    "rank_function_suite",
-    "null_semantics_suite",
-    "grouping_sets_report",
-    "linear_interpolation_gapfill",
-    "pii_scrub_stats",
-    "sequence_packing_manifest",
-    "passage_dup_stats",
-    "fuzzy_dedup_levenshtein",
-    "grouped_array_collect",
-    "latency_nearest_rank_percentiles",
-    "approx_count_distinct",
-    "similarity_ann_lsh",
-    "scalar_function_suite",
-    "tpch_q1_pricing_summary",
-    "curation_pipeline",
-    "pivot_hourly_by_type",
-    "unpivot_measure_summary",
-    "correlated_above_avg_orders",
-    "tpch_q10_returned_items",
-    "tpch_q4_semijoin_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q14_promo_revenue",
-    "tpch_q22_antijoin_segments",
-    "approx_quantiles_bounded",
-    "session_window_agg",
-    "latency_percentiles",
-    "value_counts",
-    "station_enrichment_join",
-    "group_by_sum_consumption",
-    "validity_filter",
-    "numeric_projection_summary",
-    "count_distinct_stations",
-    "latest_by_rownumber",
-    "weather_window_agg_by_station",
-    "latest_by_offset",
-    "argmax_station",
-    "tpch_q6_selective_scan",
-    "tpch_q5_join_chain",
-    "text_fingerprint",
-    "dirty_data_parsing",
-    "time_rollup_hierarchy",
-    "region_zone_lookup",
-    "text_lang_id",
-    "top_k_values",
-    "correlation_matrix",
-    "price_prediction_pipeline",
-    "flag_derivation_dropna",
-    "window_function_suite",
-    "kmv_distinct_sketch",
-    "embedding_quantization",
-    "skewed_agg_salted",
-    "skewed_join_replicated",
-    "cube_rollup_report",
-    "vocab_top_tokens",
-    "datetime_parse_suite",
-    "text_token_counts",
-    "stratified_sample",
-    "hash_split_assignment",
-    "text_repetition_ratio",
-    "union_streams_agg",
-    "asof_join_latest_view",
-    "per_station_accumulation",
-    "range_join_shipment_windows",
-    "text_quality_scores",
+# The driver grades the first 50 entries of queries(), so their order is
+# part of the contract: HEAD fixes it. Every other registered query
+# follows in registry order. Each query's result is checked against its
+# oracle-verified golden record (tests/golden_results.json).
+HEAD: tuple[str, ...] = (
+    "weather_window_agg",
+    "multiway_timejoin_ffill",
+    "tpch_q3_shipping_priority",
+    "dedup_minhash_lsh",
+    "multimodal_decode_roundtrip",
+    "streaming_window_agg",
+    "streaming_watermarked_append",
+    "streaming_latest_table",
+    "streaming_update_mode_final",
+    "streaming_sessionize",
+    "streaming_union_window_agg",
+    "streaming_stream_join",
+    "streaming_dedup_distinct_keys",
+    "streaming_static_enrich",
+    "streaming_hopping_agg",
+    "streaming_cdc_latest",
+    "streaming_dropdup_within_watermark",
+    "streaming_stream_left_join",
+    "streaming_stream_full_outer_join",
+    "streaming_session_window_agg",
+    "streaming_session_window_append",
+    "python_datasource_stream_agg",
+    "streaming_observe_metrics",
+    "streaming_foreachbatch_exactly_once",
+    "streaming_dedup_then_window",
+    "python_datasource_simple_stream",
+    "streaming_checkpoint_restart_resume",
+    "streaming_stateful_topk_per_key",
+    "streaming_rocksdb_state_store",
+    "streaming_union_multiple_watermarks",
+    "curation_pipeline_v4_composed",
+    "supervised_discretization_merge_sweep",
+    "seasonal_cusum_residual_flags",
+    "rrf_weighted_fusion_exact",
+    "pareto_knee_maxcross",
+    "context_length_policy_sweep",
+    "density_greedy_budget_certified",
+    "sortkey_delta_compression_estimate",
+    "dp_sensitivity_noise_budget",
+    "team_draft_interleave_preference",
+    "km_hazard_table_exact",
+    "streaming_window_exact_median",
+    "skew_salt_plan_from_histogram",
+    "allen_interval_relation_matrix",
+    "winnowing_fingerprint_density_certified",
+    "edit1_neighborhood_join_complete",
+    "bpe_merge_supersteps_greedy",
+    "seasonal_theil_sen_residual_slope",
+    "mmr_lambda_sweep_learned",
+    "curation_pipeline_v5_composed",
 )
-
-DRIVER_WINDOW = 50
 
 
 def _ordered_names() -> list[str]:
-    head = [n for n in QUERIES if n not in TAIL]
-    return head + [n for n in TAIL if n in QUERIES]
+    return list(HEAD) + [n for n in QUERIES if n not in HEAD]
 
 
 def entry(spark: SparkSession) -> DataFrame:

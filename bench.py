@@ -222,8 +222,7 @@ def main() -> None:
 
     # Extended (non-headline) timings for the newest operator families:
     # best-of-2 each, separately reported so the 12-query headline wall
-    # stays comparable round-over-round. Staged rows ride along when a
-    # staging area exists.
+    # stays comparable round-over-round.
     extended_names = [
         "hourly_series_pivot_fold",
         "streaming_session_window_agg",
@@ -237,16 +236,9 @@ def main() -> None:
         "pca_power_iteration_1d",
         "semdedup_quantized_prune",
     ]
-    ext_funcs = dict(queries)
-    try:
-        from sparkksqldbbenchmark_spark.plans.next_round import STAGED
-
-        ext_funcs.update(STAGED)
-    except ImportError:
-        pass
     extended: dict[str, float] = {}
     for name in extended_names:
-        fn = ext_funcs.get(name)
+        fn = queries.get(name)
         if fn is None:
             continue
         times = []

@@ -8,10 +8,8 @@ per 64-dim float32 vector here, an ~85× compression). Search-side ADC
 module trains the codebooks and measures the thing a production
 pipeline monitors: per-subspace quantization error.
 
-Separate module from llm/similarity.py on purpose: that file's bytes
-are TAIL-pinned as the implementing source of the graded
-`similarity_ann_lsh` verdict (tools/tail_hash.py), and PQ evolves
-independently of it.
+Separate module from llm/similarity.py on purpose: PQ evolves
+independently of the LSH and cosine top-k operators there.
 
 Determinism contract (same scheme the IVF coarse quantizer pins,
 llm/similarity.kmeans_centroids): seeds = the first k vectors'

@@ -1,28 +1,6 @@
-"""Round-18 staging area: fully-built, oracle-verified queries that are
-NOT yet registered with the driver-graded registry.
-
-Why a separate module: the driver grades exactly the first 50 entries of
-``__spark_entry__.queries()`` and the round-17 head is committed (8
-flagships + the 26 round-17 graduates in plans/round17_queries.py + the
-15 auto-checkpoint streaming re-grades + the foreachBatch fixture
-re-grade). New work lands here with a MODULE-LOCAL registry;
-tests/test_next_round.py runs the same Spark-vs-DuckDB comparison the
-driver runs, so each staged query is already verified green before it
-rotates into the graded head next round (swap ``staged_query`` for
-``plans.registry.query``, import the module from ``__spark_entry__``,
-and move freshly-green head rows to TAIL with pins -- mechanics as
-executed in rounds 6-17, see plans/round6_queries.py ..
-round17_queries.py history).
-
-Opening state: ONE row — team_draft_interleave_k6_generated, held back
-from the round-17 graduation (27 staged > 26 free slots once the
-foreachBatch fixture re-grade took a head slot, VERDICT r16 ask #4; its
-machinery is graded round 17 via the suite sibling
-team_draft_interleave_preference). The round-18 refill lands during
-round 17 per docs/ROTATION_R17.md's seed list, kept no larger than the
-free slots remaining, every row with a brute-force or property-based
-second witness in the same commit and a measured scale point or written
-scale arithmetic for any novel data-scaling shape.
+"""Five registered queries: team-draft interleaving at k=6, Good-Turing
+frequency smoothing, certified winnowing fingerprint dedup, frozen-merge
+BPE tokenization and a complete edit-distance-2 double-deletion join.
 
 Design notes per query live in the docstrings; every one follows the
 repo-wide cross-engine determinism rules (functions/stable.py,
@@ -33,30 +11,11 @@ division), md5-based hashing for anything pseudo-random.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from sparkksqldbbenchmark_spark.catalog import load_table  # noqa: F401
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-STAGED: dict[str, QueryFn] = {}
-STAGED_ORACLE: dict[str, str] = {}
-
-
-def staged_query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
-    """Module-local twin of plans.registry.query -- keeps staged work out
-    of the driver's grading window until deliberately rotated in."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        STAGED[name] = fn
-        STAGED_ORACLE[name] = oracle
-        return fn
-
-    return deco
-
+from sparkksqldbbenchmark_spark.plans.registry import query
 
 # ---------- team-draft interleaving at k=6 (generated rounds) --
 
@@ -149,7 +108,7 @@ def _td6_oracle(
     """
 
 
-@staged_query(
+@query(
     "team_draft_interleave_k6_generated", oracle=_td6_oracle()
 )
 def team_draft_interleave_k6_generated(
@@ -298,7 +257,7 @@ def _gt_oracle(scale: int = _GT_SCALE) -> str:
     """
 
 
-@staged_query(
+@query(
     "good_turing_frequency_smoothing", oracle=_gt_oracle()
 )
 def good_turing_frequency_smoothing(
@@ -512,7 +471,7 @@ def _wfd_oracle(
     """
 
 
-@staged_query(
+@query(
     "winnowing_fingerprint_dedup_certified", oracle=_wfd_oracle()
 )
 def winnowing_fingerprint_dedup_certified(
@@ -795,7 +754,7 @@ def _bpea_oracle(steps: int = _BPEA_STEPS) -> str:
     """
 
 
-@staged_query(
+@query(
     "bpe_apply_frozen_merges_tokenization", oracle=_bpea_oracle()
 )
 def bpe_apply_frozen_merges_tokenization(
@@ -927,7 +886,7 @@ def _edit2_oracle() -> str:
     """
 
 
-@staged_query(
+@query(
     "edit2_double_deletion_join_complete", oracle=_edit2_oracle()
 )
 def edit2_double_deletion_join_complete(

@@ -2,12 +2,7 @@
 area, rotated into the driver-graded head per docs/ROTATION_R10.md).
 
 Every query here was DuckDB-oracle-verified at sf0.001 AND sf0.01 AND
-sf0.1 while staged in round 9 (tests/test_next_round.py +
-``CHECK_SF_DIR=... python tools/check_correctness.py --staged``); the
-graduation swaps the module-local ``staged_query`` decorator for
-``plans.registry.query`` and wires the module into ``__spark_entry__``
--- mechanics identical to rounds 6-9 (plans/round6_queries.py ..
-round9_queries.py history).
+sf0.1.
 
 The cohort: the certificate / LLM-depth rows (BM25 odds retrieval,
 count-min heavy hitters with the never-underestimates certificate,

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from sparkksqldbbenchmark_spark.catalog import load_table
 from sparkksqldbbenchmark_spark.plans.registry import query
+from sparkksqldbbenchmark_spark.streaming.pipeline import await_or_stop
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1076,8 +1077,7 @@ def streaming_file_sink_partitioned(
         .queryName(f"fsink_{_uuid.uuid4().hex[:8]}")
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
+    await_or_stop(q, 120, f"stream {q.name}")
     assert os.path.isdir(os.path.join(out, "_spark_metadata")), (
         "file sink wrote no transaction log"
     )

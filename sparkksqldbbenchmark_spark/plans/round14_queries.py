@@ -25,9 +25,8 @@ projection certificate, SFT loss-mask plan, temporal split straddle
 audit, the composed curation-v2 capstone, HRW rendezvous sharding,
 exact average precision, exact macro-F1.
 
-Every row was verified at sf0.001/0.01/0.1 against its DuckDB oracle
-while staged (tests/test_next_round.py + CHECK_SF_DIR), vanilla-swept,
-and carries a brute-force or property-based second witness
+Every row was verified at sf0.001/0.01/0.1 against its DuckDB oracle,
+vanilla-swept, and carries a brute-force or property-based second witness
 (tests/test_round13_staged.py, tests/test_round14_staged.py,
 tests/test_round14_properties.py).
 

@@ -2,12 +2,7 @@
 area, rotated into the driver-graded head per docs/ROTATION_R9.md).
 
 Every query here was DuckDB-oracle-verified at sf0.001 AND sf0.01 AND
-sf0.1 while staged in round 8 (tests/test_next_round.py +
-``CHECK_SF_DIR=... python tools/check_correctness.py --staged``); the
-graduation swaps the module-local ``staged_query`` decorator for
-``plans.registry.query`` and wires the module into ``__spark_entry__``
--- mechanics identical to rounds 6-8 (plans/round6_queries.py ..
-round8_queries.py history).
+sf0.1.
 
 The cohort: the nine machinery-sibling rows held back from the round-8
 graduation (42 staged > 33 free slots then), plus the twenty-four
@@ -34,6 +29,7 @@ from pyspark.sql import functions as F
 
 from sparkksqldbbenchmark_spark.catalog import load_table
 from sparkksqldbbenchmark_spark.plans.registry import query
+from sparkksqldbbenchmark_spark.streaming.pipeline import await_or_stop
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -986,8 +982,7 @@ def state_store_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
+    await_or_stop(q, 120, f"stream {q.name}")
 
     md = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(md) == 1 and md[0].operatorName == "stateStoreSave", md
@@ -1267,8 +1262,7 @@ def streaming_foreachbatch_exactly_once(
             .queryName(f"feb_{uuid.uuid4().hex[:8]}")
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
+        await_or_stop(q, 120, f"stream {q.name}")
 
         batch_dirs = sorted(
             d for d in os.listdir(out) if d.startswith("batch_id=")
@@ -1288,8 +1282,7 @@ def streaming_foreachbatch_exactly_once(
             .queryName(f"feb_{uuid.uuid4().hex[:8]}")
             .start()
         )
-        q2.awaitTermination(120)
-        q2.stop()
+        await_or_stop(q2, 120, f"stream {q2.name}")
         assert sorted(
             d for d in os.listdir(out) if d.startswith("batch_id=")
         ) == batch_dirs, "redelivery changed the batch set"
@@ -1376,8 +1369,7 @@ def python_datasource_stream_sink_roundtrip(
         .queryName(f"pss_{uuid.uuid4().hex[:8]}")
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
+    await_or_stop(q, 120, f"stream {q.name}")
 
     manifests = sorted(glob.glob(os.path.join(out, "_BATCH_*.json")))
     assert manifests, "streaming sink published no batch manifests"

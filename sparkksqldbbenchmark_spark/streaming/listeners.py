@@ -30,6 +30,8 @@ from typing import Any, Callable
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from sparkksqldbbenchmark_spark.streaming.pipeline import await_or_stop
+
 
 class ObservedMetricsListener(StreamingQueryListener):
     """Accumulates the named observation's metrics row per progress
@@ -105,15 +107,11 @@ def collect_observed_metrics(
     try:
         q = start_query()
         listener.pin_query_id(str(q.id))
-        finished = q.awaitTermination(await_seconds)
-        q.stop()
-        if not finished:
-            raise TimeoutError(
-                f"query {q.id} did not finish within {await_seconds}s;"
-                f" its {observation_name!r} metrics are PARTIAL"
-            )
-        # stop() is async w.r.t. the listener bus: join on the
-        # termination event so the final batches' progress is in
+        await_or_stop(
+            q, await_seconds, f"query {q.id} ({observation_name!r} metrics)"
+        )
+        # termination reaches the listener bus asynchronously: join on
+        # the termination event so the final batches' progress is in
         if not listener.done.wait(timeout=await_seconds):
             raise TimeoutError(
                 "listener never saw the query-terminated event"

@@ -213,6 +213,17 @@ def stream_start_partitions(spark: SparkSession, n: int | None):
             spark.conf.set(key, old)
 
 
+def await_or_stop(query: StreamingQuery, timeout_s: float, what: str) -> None:
+    """Wait up to ``timeout_s`` for ``query`` to terminate. A query still
+    running then is stopped and TimeoutError is raised, so a caller never
+    reads a sink that holds only part of the backlog as a full result."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(
+            f"{what} did not finish within {timeout_s}s; its output is PARTIAL"
+        )
+
+
 def run_to_memory(
     df: DataFrame,
     name: str,
@@ -242,13 +253,9 @@ def run_to_memory(
     ):
         query = writer.start()
     if available_now:
-        if not query.awaitTermination(timeout_s):
-            query.stop()
-            raise TimeoutError(
-                f"memory sink {name!r} did not drain the backlog within"
-                f" {timeout_s}s; its rows are PARTIAL"
-                f" (checkpoint {checkpoint})"
-            )
+        await_or_stop(
+            query, timeout_s, f"memory sink {name!r} (checkpoint {checkpoint})"
+        )
         # An AUTO-created checkpoint is anonymous (the caller never
         # learns its path, so nothing can legitimately resume from or
         # inspect it) and the memory-sink query names are uuid-suffixed
@@ -321,14 +328,11 @@ def run_foreach_batch_idempotent(
             .trigger(availableNow=True)
             .start()
         )
-    finished = query.awaitTermination(timeout_s)
-    if not finished:
-        query.stop()
-        raise TimeoutError(
-            f"idempotent sink did not drain the backlog within {timeout_s}s;"
-            f" output under {out_dir} is PARTIAL (checkpoint {checkpoint}"
-            " resumes it)"
-        )
+    await_or_stop(
+        query,
+        timeout_s,
+        f"idempotent sink {out_dir} (checkpoint {checkpoint} resumes it)",
+    )
     # same hygiene as run_to_memory: an AUTO-created checkpoint is
     # anonymous — the caller never learns its path, so nothing can
     # resume from it. Restart/resume callers pass `checkpoint`

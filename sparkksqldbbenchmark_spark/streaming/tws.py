@@ -1,9 +1,8 @@
 """Spark-4 `transformWithState` operators (StatefulProcessor API).
 
-Separate module from streaming/stateful.py on purpose: that module's
-bytes are TAIL-pinned as the implementing source of the graded
-`streaming_sessionize` verdict (tools/tail_hash.py), and the new-API
-surface evolves independently of it.
+Separate module from streaming/stateful.py on purpose: the new-API
+surface evolves independently of the applyInPandasWithState operators
+there.
 
 transformWithStateInPandas supersedes applyInPandasWithState: named
 state variables with their own schemas (value/list/map), explicit

@@ -7,7 +7,7 @@ import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Session-scoped scratch root (VERDICT r15 "what's wrong" #2): every
 # tempfile.mkdtemp in any test or helper lands under ONE per-session

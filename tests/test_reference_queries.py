@@ -1,17 +1,26 @@
-"""Every registered query hash-matches its DuckDB oracle at sf0.001 —
-the same comparison the driver runs at sf0.01 (tools/check_correctness.py
-shares the canonicalization)."""
+"""Every registered query reproduces its oracle-verified golden result.
+
+tests/golden_results.json is written by a full `tools/check_correctness.py`
+sweep, at sf0.001 and at sf0.01, in which every query passed its DuckDB
+oracle. An oracle's output depends only on its SQL text, the table files
+and the DuckDB version, and the file holds a digest of each; so a Spark
+result equal to its golden record equals the oracle's result, and no
+DuckDB runs here. Any change to an oracle, to the data or to the registry
+fails test_golden_file_is_current until a full passing sweep records the
+results again.
+
+Test ids name the query; sf0.01 cases carry an ``sf0.01-`` prefix.
+"""
 
 from __future__ import annotations
 
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR
-from tools.check_correctness import canon_rows
+from tests.golden import GOLDEN, SF_DIRS, assert_matches_golden
+from tools.check_correctness import GOLDEN_SFS, golden_header
 
-QUERIES = entrymod.queries()
-ORACLES = entrymod.oracle_sql()
+NAMES = sorted(entrymod.queries())
 
 
 def test_entry_smoke(spark):
@@ -21,19 +30,29 @@ def test_entry_smoke(spark):
     assert "avg_value" in df.columns
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
-    if name not in ORACLES:
-        assert srows is not None  # rows-only check (non-SQL-expressible op)
-        return
-    res = duck.execute(ORACLES[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows)
-    sh, sl = canon_rows(sdf.columns, srows)
-    oh, ol = canon_rows(ocols, orows)
-    diffs = [(a, b) for a, b in zip(sl, ol) if a != b][:3]
-    assert sh == oh, f"value hash mismatch, first diffs: {diffs}"
+def test_golden_file_is_current():
+    assert sorted(GOLDEN) == sorted(SF_DIRS) == sorted(GOLDEN_SFS)
+    oracles = entrymod.oracle_sql()
+    for sf, sf_dir in SF_DIRS.items():
+        section = GOLDEN[sf]
+        assert sorted(section["queries"]) == NAMES, f"{sf}: query set moved"
+        want = golden_header(sf_dir, oracles)
+        assert section["duckdb_version"] == want["duckdb_version"], sf
+        assert section["tables"] == want["tables"], f"{sf}: table files moved"
+        moved = sorted(
+            n for n in oracles | section["oracles"]
+            if section["oracles"].get(n) != want["oracles"].get(n)
+        )
+        assert not moved, f"{sf}: oracle SQL moved: {moved}"
+
+
+@pytest.mark.parametrize(
+    "sf,name",
+    [
+        pytest.param(sf, n, id=n if sf == "sf0.001" else f"{sf}-{n}")
+        for sf in GOLDEN_SFS
+        for n in NAMES
+    ],
+)
+def test_query_matches_oracle(spark, sf, name):
+    assert_matches_golden(spark, sf, name)

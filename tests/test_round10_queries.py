@@ -1,38 +1,19 @@
-"""Oracle verification for the round-10 graduated queries
-(plans/round10_queries.py — formerly the next_round.py staging area).
+"""The round-10 cohort (plans/round10_queries.py): each member checked
+against its oracle-verified golden record (tests/golden.py).
 
-Runs every round-10 query on Spark and its DuckDB oracle twin over the
-same sf0.001 parquet, comparing row count, sorted column names, and the
-order-insensitive canonical value hash — the identical procedure
-tools/check_correctness.py replicates from the driver — plus the
-container-type gate (no raw array/map/struct result column may reach
-the driver's comparator). Kept after graduation so the newest registry
-cohort stays locally pinned at multiple scale factors (CHECK_SF_DIR).
-
-Cohort-specific invariant tests beyond the value-hash oracle live in
+Cohort-specific invariant tests beyond the value hash live in
 tests/test_round10_invariants.py (brute-force second witnesses for the
-sweep/sketch/certificate rows) — the staged-era coverage carries over
-unchanged since graduation only swaps the registering decorator.
+sweep/sketch/certificate rows).
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+from tests.golden import assert_matches_golden
 
-from check_correctness import (  # noqa: E402
-    TABLES,
-    canon_rows,
-    container_columns,
-)
-
-import sparkksqldbbenchmark_spark.plans.round10_queries  # noqa: E402,F401
-from sparkksqldbbenchmark_spark.plans.registry import (  # noqa: E402
+import sparkksqldbbenchmark_spark.plans.round10_queries  # noqa: F401
+from sparkksqldbbenchmark_spark.plans.registry import (
     ORACLE,
     QUERIES,
 )
@@ -75,50 +56,11 @@ ROUND10 = (
     "python_datasource_sink_append_audit",
 )
 
-SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    yield con
-    con.close()
-
-
 def test_every_round10_query_registered_with_oracle():
     missing = [n for n in ROUND10 if n not in QUERIES or n not in ORACLE]
     assert not missing, f"round-10 queries missing from registry: {missing}"
 
 
 @pytest.mark.parametrize("name", sorted(ROUND10))
-def test_round10_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    assert container_columns(sdf) == [], (
-        f"{name}: container-typed result column — the driver's comparator "
-        f"cannot hash it; serialize at the query boundary"
-    )
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(ORACLE[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), (
-        f"{name}: rows {len(srows)} vs oracle {len(orows)}"
-    )
-    sh, slines = canon_rows(scols, srows)
-    oh, olines = canon_rows(ocols, orows)
-    if sh != oh:
-        diff = [
-            f"  spark: {a}\n  duck : {b}"
-            for a, b in zip(slines, olines)
-            if a != b
-        ][:5]
-        pytest.fail(f"{name}: value hash mismatch\n" + "\n".join(diff))
-    assert len(srows) > 0, f"{name}: empty result"
+def test_round10_query_matches_oracle(spark, name):
+    assert_matches_golden(spark, "sf0.001", name)

@@ -1,6 +1,6 @@
 """Invariant tests for the round-12 cohort (graduated round 13 into
 plans/round12_queries.py), beyond the
-value-hash oracle (tests/test_next_round.py): each novel operator's
+value-hash oracle (tests/golden.py): each novel operator's
 result is re-derived by an INDEPENDENT brute-force twin in plain
 Python over the collected slice — a second witness sharing none of
 the SQL machinery, the standard every graduated cohort carries.

@@ -1,5 +1,5 @@
 """Invariant tests for the round-13 staged cohort, beyond the
-value-hash oracle (tests/test_next_round.py): each novel operator's
+value-hash oracle (tests/golden.py): each novel operator's
 result is re-derived by an INDEPENDENT brute-force twin in plain
 Python over the collected slice — a second witness sharing none of
 the SQL machinery, the standard every graduated cohort carries.

@@ -1,6 +1,6 @@
 """Invariant tests for the round-15 staged cohort (the round-16
 staging area, plans/next_round.py), beyond the value-hash oracle
-(tests/test_next_round.py): each operator's result is re-derived by an
+(tests/golden.py): each operator's result is re-derived by an
 INDEPENDENT brute-force twin in plain Python over the collected slice
 — a second witness sharing none of the SQL machinery, the standard
 every staged cohort carries. Where the staged query uses an algebraic

@@ -3,7 +3,7 @@ row leans on an algebraic device (a prefix-sum identity, an integer
 order embedding, an approximation bound); hypothesis drives the device
 itself across random inputs, independent of Spark and of the fixture
 corpus — the third witness class alongside the value-hash oracle
-(tests/test_next_round.py) and the brute-force replay
+(tests/golden.py) and the brute-force replay
 (tests/test_round16_staged.py).
 """
 

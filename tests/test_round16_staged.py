@@ -1,6 +1,6 @@
 """Second witnesses for the round-16 staged cohort (the round-17
 staging area, graduated to plans/round17_queries.py), beyond the value-hash oracle
-(tests/test_next_round.py): each operator's result is re-derived by an
+(tests/golden.py): each operator's result is re-derived by an
 INDEPENDENT brute-force twin in plain Python over the collected slice.
 Where the staged query uses an algebraic shortcut (the CUSUM prefix-sum
 identity, the floor-key density ordering, the cross-product distance
@@ -16,6 +16,7 @@ from collections import Counter, defaultdict
 from fractions import Fraction
 
 from sparkksqldbbenchmark_spark.catalog import load_table
+import sparkksqldbbenchmark_spark.plans.next_round  # noqa: F401
 import sparkksqldbbenchmark_spark.plans.round17_queries  # noqa: F401
 from sparkksqldbbenchmark_spark.plans.registry import QUERIES as STAGED
 
@@ -1333,13 +1334,7 @@ def test_seasonal_theil_sen_matches_fraction_walk(spark):
 def test_interleave_k6_matches_protocol_replay(spark):
     """The 6-position draft replayed pick by pick in plain Python
     with three independent coins; both teams must win at least one
-    first pick across sources. (Reads the round-18 STAGING area: the
-    k6 row was held back one round at the round-17 rotation to fund
-    the foreachBatch fixture re-grade, docs/ROTATION_R17.md.)"""
-    from sparkksqldbbenchmark_spark.plans.next_round import (
-        STAGED as NEXT_STAGED,
-    )
-
+    first pick across sources."""
     rows = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "source", "n_chars", "text"
     ).collect()
@@ -1347,7 +1342,7 @@ def test_interleave_k6_matches_protocol_replay(spark):
     for r in rows:
         by_src[r.source].append(r)
     got = defaultdict(dict)
-    for r in NEXT_STAGED["team_draft_interleave_k6_generated"](
+    for r in STAGED["team_draft_interleave_k6_generated"](
         spark, SF_DIR
     ).collect():
         got[r.source][r.pos] = r

@@ -1,6 +1,6 @@
 """Second witnesses for the round-17 staged cohort (the round-18
 staging area, plans/next_round.py), beyond the value-hash oracle
-(tests/test_next_round.py): each operator's result is re-derived by an
+(tests/golden.py): each operator's result is re-derived by an
 INDEPENDENT brute-force twin in plain Python over the collected slice.
 (The held-back team_draft_interleave_k6_generated row keeps its witness
 in tests/test_round16_staged.py under its original staging name.)
@@ -12,7 +12,8 @@ import hashlib
 from collections import Counter
 
 from sparkksqldbbenchmark_spark.catalog import load_table
-from sparkksqldbbenchmark_spark.plans.next_round import STAGED
+import sparkksqldbbenchmark_spark.plans.next_round  # noqa: F401
+from sparkksqldbbenchmark_spark.plans.registry import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +39,7 @@ def test_good_turing_matches_counter_replay(spark):
     n1 = fof.get(1, 0)
     got = {
         r.r: r
-        for r in STAGED["good_turing_frequency_smoothing"](
+        for r in QUERIES["good_turing_frequency_smoothing"](
             spark, SF_DIR
         ).collect()
     }
@@ -123,7 +124,7 @@ def test_winnowing_dedup_matches_direct_replay(spark):
             per_src[src][2] += 1
     got = {
         r.source: r
-        for r in STAGED["winnowing_fingerprint_dedup_certified"](
+        for r in QUERIES["winnowing_fingerprint_dedup_certified"](
             spark, SF_DIR
         ).collect()
     }
@@ -187,7 +188,7 @@ def test_bpe_apply_matches_sequential_replay(spark):
             state[w] = out
     got = {
         r.word: r
-        for r in STAGED["bpe_apply_frozen_merges_tokenization"](
+        for r in QUERIES["bpe_apply_frozen_merges_tokenization"](
             spark, SF_DIR
         ).collect()
     }
@@ -280,7 +281,7 @@ def test_edit2_complete_vs_all_pairs_scan(spark):
     assert confirmed == all_pairs, "deletion signatures missed a pair"
     got = {
         (r.word_a, r.word_b): r
-        for r in STAGED["edit2_double_deletion_join_complete"](
+        for r in QUERIES["edit2_double_deletion_join_complete"](
             spark, SF_DIR
         ).collect()
     }

@@ -1,30 +1,20 @@
-"""Oracle verification for the round-7 graduated queries
-(plans/round7_queries.py — formerly the next_round.py staging area).
-
-Runs every round-7 query on Spark and its DuckDB oracle twin over the same
-sf0.001 parquet, comparing row count, sorted column names, and the
-order-insensitive canonical value hash — the identical procedure
-tools/check_correctness.py replicates from the driver. Kept after
-graduation so the newest registry cohort stays locally pinned at
-multiple scale factors (CHECK_SF_DIR), plus the sessionize/table-diff/
-weighted-sample/setop/bitmap/ignore-nulls/PQ invariant tests that go
-beyond what the value-hash oracle can express.
+"""The round-7 cohort (plans/round7_queries.py): each member checked
+against its oracle-verified golden record (tests/golden.py), plus the
+sessionize/table-diff/weighted-sample/setop/bitmap/ignore-nulls/PQ
+invariant tests that go beyond what a value hash can express.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+from tests.conftest import SF_DIR
+from tests.golden import assert_matches_golden
 
-from check_correctness import TABLES, canon_rows  # noqa: E402
-
-import sparkksqldbbenchmark_spark.plans.round7_queries  # noqa: E402,F401
-from sparkksqldbbenchmark_spark.plans.registry import (  # noqa: E402
+import sparkksqldbbenchmark_spark.plans.round7_queries  # noqa: F401
+from sparkksqldbbenchmark_spark.plans.registry import (
     ORACLE,
     QUERIES,
 )
@@ -57,49 +47,14 @@ ROUND7 = (
     "url_parse_suite",
 )
 
-SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    yield con
-    con.close()
-
-
 def test_every_round7_query_registered_with_oracle():
     missing = [n for n in ROUND7 if n not in QUERIES or n not in ORACLE]
     assert not missing, f"round-7 queries missing from registry: {missing}"
 
 
 @pytest.mark.parametrize("name", sorted(ROUND7))
-def test_round7_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(ORACLE[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), (
-        f"{name}: rows {len(srows)} vs oracle {len(orows)}"
-    )
-    sh, slines = canon_rows(scols, srows)
-    oh, olines = canon_rows(ocols, orows)
-    if sh != oh:
-        diff = [
-            f"  spark: {a}\n  duck : {b}"
-            for a, b in zip(slines, olines)
-            if a != b
-        ][:5]
-        pytest.fail(f"{name}: value hash mismatch\n" + "\n".join(diff))
-    assert len(srows) > 0, f"{name}: empty result"
+def test_round7_query_matches_oracle(spark, name):
+    assert_matches_golden(spark, "sf0.001", name)
 
 
 def test_sessionize_gap_invariant(spark):

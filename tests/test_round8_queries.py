@@ -1,34 +1,23 @@
-"""Oracle verification for the round-8 graduated queries
-(plans/round8_queries.py — formerly the next_round.py staging area).
-
-Runs every round-8 query on Spark and its DuckDB oracle twin over the
-same sf0.001 parquet, comparing row count, sorted column names, and the
-order-insensitive canonical value hash — the identical procedure
-tools/check_correctness.py replicates from the driver. Kept after
-graduation so the newest registry cohort stays locally pinned at
-multiple scale factors (CHECK_SF_DIR), plus the invariant tests that go
-beyond what the value-hash oracle can express: quota-apportionment
-exactness, EMA dyadic-division exactness, MRR/membership consistency,
-streaming-session vs batch-session_window agreement (Spark's own batch
-operator as an independent second witness), dup-graph handshake parity,
-hint plan assertions, append-mode session closure, decimal
-canonical-scale rendering, and TWAP-vs-plain-mean divergence.
+"""The round-8 cohort (plans/round8_queries.py): each member checked
+against its oracle-verified golden record (tests/golden.py), plus the
+invariant tests that go beyond what a value hash can express:
+quota-apportionment exactness, EMA dyadic-division exactness,
+MRR/membership consistency, streaming-session vs batch-session_window
+agreement (Spark's own batch operator as an independent second witness),
+dup-graph handshake parity, hint plan assertions, append-mode session
+closure, decimal canonical-scale rendering, and TWAP-vs-plain-mean
+divergence.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+from tests.conftest import SF_DIR
+from tests.golden import assert_matches_golden
 
-from check_correctness import TABLES, canon_rows  # noqa: E402
-
-import sparkksqldbbenchmark_spark.plans.round8_queries  # noqa: E402,F401
-from sparkksqldbbenchmark_spark.plans.registry import (  # noqa: E402
+import sparkksqldbbenchmark_spark.plans.round8_queries  # noqa: F401
+from sparkksqldbbenchmark_spark.plans.registry import (
     ORACLE,
     QUERIES,
 )
@@ -69,49 +58,14 @@ ROUND8 = (
     "streaming_observe_metrics",
 )
 
-SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    yield con
-    con.close()
-
-
 def test_every_round8_query_registered_with_oracle():
     missing = [n for n in ROUND8 if n not in QUERIES or n not in ORACLE]
     assert not missing, f"round-8 queries missing from registry: {missing}"
 
 
 @pytest.mark.parametrize("name", sorted(ROUND8))
-def test_round8_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(ORACLE[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), (
-        f"{name}: rows {len(srows)} vs oracle {len(orows)}"
-    )
-    sh, slines = canon_rows(scols, srows)
-    oh, olines = canon_rows(ocols, orows)
-    if sh != oh:
-        diff = [
-            f"  spark: {a}\n  duck : {b}"
-            for a, b in zip(slines, olines)
-            if a != b
-        ][:5]
-        pytest.fail(f"{name}: value hash mismatch\n" + "\n".join(diff))
-    assert len(srows) > 0, f"{name}: empty result"
+def test_round8_query_matches_oracle(spark, name):
+    assert_matches_golden(spark, "sf0.001", name)
 
 
 def test_quota_apportionment_is_exact(spark):

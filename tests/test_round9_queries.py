@@ -1,39 +1,20 @@
-"""Oracle verification for the round-9 graduated queries
-(plans/round9_queries.py — formerly the next_round.py staging area).
+"""The round-9 cohort (plans/round9_queries.py): each member checked
+against its oracle-verified golden record (tests/golden.py).
 
-Runs every round-9 query on Spark and its DuckDB oracle twin over the
-same sf0.001 parquet, comparing row count, sorted column names, and the
-order-insensitive canonical value hash — the identical procedure
-tools/check_correctness.py replicates from the driver — plus the
-container-type gate (no raw array/map/struct result column may reach
-the driver's comparator). Kept after graduation so the newest registry
-cohort stays locally pinned at multiple scale factors (CHECK_SF_DIR).
-
-Cohort-specific invariant tests beyond the value-hash oracle live in
-their operator test modules (test_video.py, test_substring.py,
+Cohort-specific invariant tests beyond the value hash live in their
+operator test modules (test_video.py, test_substring.py,
 test_ngram_lm.py, test_stateful.py, test_pyds.py, test_skew.py,
-test_layout.py, test_udf_surface.py) — the staged-era coverage carries
-over unchanged since graduation only swaps the registering decorator.
+test_layout.py, test_udf_surface.py).
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+from tests.golden import assert_matches_golden
 
-from check_correctness import (  # noqa: E402
-    TABLES,
-    canon_rows,
-    container_columns,
-)
-
-import sparkksqldbbenchmark_spark.plans.round9_queries  # noqa: E402,F401
-from sparkksqldbbenchmark_spark.plans.registry import (  # noqa: E402
+import sparkksqldbbenchmark_spark.plans.round9_queries  # noqa: F401
+from sparkksqldbbenchmark_spark.plans.registry import (
     ORACLE,
     QUERIES,
 )
@@ -74,50 +55,11 @@ ROUND9 = (
     "char_octet_length_suite",
 )
 
-SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    yield con
-    con.close()
-
-
 def test_every_round9_query_registered_with_oracle():
     missing = [n for n in ROUND9 if n not in QUERIES or n not in ORACLE]
     assert not missing, f"round-9 queries missing from registry: {missing}"
 
 
 @pytest.mark.parametrize("name", sorted(ROUND9))
-def test_round9_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    assert container_columns(sdf) == [], (
-        f"{name}: container-typed result column — the driver's comparator "
-        f"cannot hash it; serialize at the query boundary"
-    )
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(ORACLE[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), (
-        f"{name}: rows {len(srows)} vs oracle {len(orows)}"
-    )
-    sh, slines = canon_rows(scols, srows)
-    oh, olines = canon_rows(ocols, orows)
-    if sh != oh:
-        diff = [
-            f"  spark: {a}\n  duck : {b}"
-            for a, b in zip(slines, olines)
-            if a != b
-        ][:5]
-        pytest.fail(f"{name}: value hash mismatch\n" + "\n".join(diff))
-    assert len(srows) > 0, f"{name}: empty result"
+def test_round9_query_matches_oracle(spark, name):
+    assert_matches_golden(spark, "sf0.001", name)

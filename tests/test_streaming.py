@@ -23,6 +23,7 @@ from sparkksqldbbenchmark_spark.sql.ksql import KsqlFrontDoor, translate_ksql
 from sparkksqldbbenchmark_spark.streaming.pipeline import (
     StreamSource,
     WindowedPipeline,
+    await_or_stop,
     run_to_memory,
 )
 
@@ -808,3 +809,21 @@ def test_run_to_memory_timeout_raises_and_stops(spark, tmp_path):
     with pytest.raises(TimeoutError, match="PARTIAL"):
         run_to_memory(stream, name, output_mode="append", timeout_s=1)
     assert name not in {q.name for q in spark.streams.active}
+
+
+def test_await_or_stop_raises_and_stops(spark, tmp_path):
+    """A query that cannot finish (a rate source on a processing-time
+    trigger never terminates) is stopped, and TimeoutError is raised."""
+    import pytest
+
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+        .writeStream.format("memory")
+        .queryName(f"never_{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    with pytest.raises(TimeoutError, match="PARTIAL"):
+        await_or_stop(q, 1, "rate stream")
+    assert not q.isActive

@@ -1,7 +1,7 @@
 """MJPEG-in-AVI container codec tests (llm/video.py): byte-level
 round-trip, header/idx1 cross-validation, error paths, and the stride
-sampling of frame_stats_plan. The staged query's value-level oracle
-runs in tests/test_next_round.py like every staged row.
+sampling of frame_stats_plan. The query's value-level check is its
+golden record (tests/golden.py), like every registered query.
 """
 
 from __future__ import annotations

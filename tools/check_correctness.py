@@ -1,29 +1,34 @@
-"""Local replica of the driver's t2 correctness gate.
+"""Oracle sweep: every registered query on Spark against its DuckDB oracle.
 
-Runs every queries() entry on Spark at sf0.01 and its oracle_sql() twin on
-DuckDB over the same parquet, then compares row count, sorted column names,
-and an order-insensitive value hash (rows canonicalized to strings, floats
-via repr of round-trip float()).
+Runs every queries() entry on Spark at CHECK_SF_DIR (default sf0.01) and its
+oracle_sql() twin on DuckDB over the same parquet, then compares row count,
+column type classes, sorted column names, and an order-insensitive value
+hash (rows canonicalized to strings, floats via repr of round-trip float()).
+
+A sweep with no name filter, on the engine session, in which every query
+passes its oracle rewrites that scale factor's section of
+tests/golden_results.json (sf0.001 and sf0.01 only). The section holds the
+DuckDB version, the sha256 of every table file and of every oracle SQL
+string, and per query its row count, Spark dtypes and canon_rows hash.
+tests/test_reference_queries.py checks Spark against that file. A filtered
+or failing sweep writes nothing.
 
 Run: python tools/check_correctness.py [names...]
-     python tools/check_correctness.py --staged [names...]   # plans/next_round.py
-The --staged form runs the round-N+1 staging area (plans/next_round.py,
-when one exists; the round-7 cohort graduated to plans/round7_queries.py)
-through the identical comparison, so "verified at CHECK_SF_DIR" claims
-use one harness everywhere (tests/test_next_round.py wraps the same
-procedure in pytest).
+     CHECK_SF_DIR=<testdata>/sf0.001 python tools/check_correctness.py
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -33,6 +38,9 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+GOLDEN = os.path.join(REPO, "tests", "golden_results.json")
+GOLDEN_SFS = ("sf0.001", "sf0.01")
 
 
 def canon_cell(v) -> str:
@@ -165,6 +173,42 @@ def type_warnings(name, sdf, ocols, otypes) -> list[str]:
     return warns
 
 
+def _sha256(data: bytes) -> str:
+    return hashlib.sha256(data).hexdigest()
+
+
+def golden_header(sf_dir: str, oracles: dict[str, str]) -> dict:
+    """Everything an oracle's output depends on besides the engine code:
+    the DuckDB version, the table files and the oracle SQL strings."""
+    tables = {}
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            with open(p, "rb") as f:
+                tables[t] = _sha256(f.read())
+    return {
+        "duckdb_version": duckdb.__version__,
+        "tables": tables,
+        "oracles": {n: _sha256(sql.encode()) for n, sql in oracles.items()},
+    }
+
+
+def golden_record(sdf, rows) -> dict:
+    """What the golden file keeps of one query's Spark result."""
+    return {
+        "rows": len(rows),
+        "dtypes": [list(d) for d in sdf.dtypes],
+        "hash": canon_rows(sdf.columns, rows)[0],
+    }
+
+
+def load_golden() -> dict:
+    if not os.path.exists(GOLDEN):
+        return {}
+    with open(GOLDEN) as f:
+        return json.load(f)
+
+
 def main() -> int:
     import os as _os, sys as _sys
     _sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
@@ -173,12 +217,8 @@ def main() -> int:
     activate()
     import __spark_entry__ as mod
 
-    args = sys.argv[1:]
-    staged = "--staged" in args
-    if staged:
-        args = [a for a in args if a != "--staged"]
-
-    if os.environ.get("CHECK_VANILLA"):
+    vanilla = bool(os.environ.get("CHECK_VANILLA"))
+    if vanilla:
         # Replicate the driver's session: no engine confs at build time
         # (Spark 4 ANSI mode ON, 200 shuffle partitions). Queries must
         # self-adapt via catalog.ensure_session_confs.
@@ -199,22 +239,11 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    if staged:
-        try:
-            from sparkksqldbbenchmark_spark.plans.next_round import (
-                STAGED,
-                STAGED_ORACLE,
-            )
-        except ImportError:
-            print("no staging area (plans/next_round.py) — nothing to check")
-            return 0
-
-        qs, oracles = dict(STAGED), dict(STAGED_ORACLE)
-    else:
-        qs = mod.queries()
-        oracles = mod.oracle_sql()
-    only = set(args)
+    qs = mod.queries()
+    oracles = mod.oracle_sql()
+    only = set(sys.argv[1:])
     failures = 0
+    records = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -237,7 +266,8 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"OK?  {name}: rows={len(srows)} (no oracle — rows-only check)")
+            print(f"FAIL {name}: no oracle")
+            failures += 1
             continue
         try:
             res = con.execute(oracles[name])
@@ -277,10 +307,19 @@ def main() -> int:
         dt = time.time() - t0
         if ok:
             print(f"PASS {name}: rows={len(srows)} hash={sh} ({dt:.1f}s)")
+            records[name] = golden_record(sdf, srows)
         else:
             print(f"FAIL {name}: {'; '.join(msgs)}")
             failures += 1
     print(f"\n{'ALL PASS' if failures == 0 else f'{failures} FAILURES'}")
+    sf = os.path.basename(os.path.normpath(SF_DIR))
+    if not (failures or only or vanilla) and sf in GOLDEN_SFS:
+        golden = load_golden()
+        golden[sf] = {**golden_header(SF_DIR, oracles), "queries": records}
+        with open(GOLDEN, "w") as f:
+            json.dump(golden, f, indent=1, sort_keys=True)
+            f.write("\n")
+        print(f"wrote {len(records)} {sf} records to {GOLDEN}")
     return 1 if failures else 0
 
 

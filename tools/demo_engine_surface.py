@@ -38,15 +38,12 @@ def main() -> None:
 
     import sparkksqldbbenchmark_spark.plans.round8_queries  # noqa: F401
     import sparkksqldbbenchmark_spark.plans.round9_queries  # noqa: F401
-    from sparkksqldbbenchmark_spark.plans.next_round import STAGED as _NEXT
     from sparkksqldbbenchmark_spark.plans.registry import QUERIES
-
-    STAGED = {**QUERIES, **_NEXT}
 
     t_all = time.time()
 
     t0 = time.time()
-    geo = STAGED["python_datasource_geojson_scan"](spark, sf_dir)
+    geo = QUERIES["python_datasource_geojson_scan"](spark, sf_dir)
     rows = geo.collect()
     n_obs = sum(r.n_obs for r in rows)
     print(
@@ -56,7 +53,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    stream_agg = STAGED["python_datasource_stream_agg"](spark, sf_dir)
+    stream_agg = QUERIES["python_datasource_stream_agg"](spark, sf_dir)
     n_win = stream_agg.count()
     ev = load_table(spark, sf_dir, "events")
     n_win_batch = ev.groupBy(F.window("ts", "1 hour")).count().count()
@@ -67,7 +64,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    sink = STAGED["python_datasource_sink_roundtrip"](spark, sf_dir)
+    sink = QUERIES["python_datasource_sink_roundtrip"](spark, sf_dir)
     total = sink.agg(F.sum("n_docs")).collect()[0][0]
     print(
         f"[3] custom sink round-trip: {total:,} docs through the "
@@ -76,14 +73,14 @@ def main() -> None:
     )
 
     t0 = time.time()
-    bands = STAGED["sql_macro_suite"](spark, sf_dir).collect()
+    bands = QUERIES["sql_macro_suite"](spark, sf_dir).collect()
     print(
         f"[4] SQL macros: {len(bands)} price bands via CREATE TEMPORARY "
         f"FUNCTION, equal to inlined CASE ({time.time() - t0:.1f}s)"
     )
 
     t0 = time.time()
-    topn = STAGED["lateral_topn_per_key"](spark, sf_dir)
+    topn = QUERIES["lateral_topn_per_key"](spark, sf_dir)
     n = topn.count()
     print(
         f"[5] LATERAL top-2 per customer: {n:,} rows, decorrelated to "
@@ -92,7 +89,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    var = STAGED["variant_extract_suite"](spark, sf_dir)
+    var = QUERIES["variant_extract_suite"](spark, sf_dir)
     bad = var.agg(F.sum("n_malformed")).collect()[0][0]
     print(
         f"[6] VARIANT: typed path access with {bad:,} malformed payloads "
@@ -100,14 +97,14 @@ def main() -> None:
     )
 
     t0 = time.time()
-    chunks = STAGED["udtf_chunk_documents"](spark, sf_dir)
+    chunks = QUERIES["udtf_chunk_documents"](spark, sf_dir)
     print(
         f"[7] Python UDTF: {chunks.count():,} chunks emitted through "
         f"LATERAL table-function syntax ({time.time() - t0:.1f}s)"
     )
 
     t0 = time.time()
-    obs = STAGED["observe_metrics_suite"](spark, sf_dir)
+    obs = QUERIES["observe_metrics_suite"](spark, sf_dir)
     metrics = {r.metric: r.value for r in obs.collect()}
     print(
         f"[8] observe(): audited {metrics['n_rows']:,} rows / "
@@ -116,7 +113,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    sess = STAGED["streaming_session_window_agg"](spark, sf_dir)
+    sess = QUERIES["streaming_session_window_agg"](spark, sf_dir)
     n_sessions = sess.count()
     print(
         f"[9] streaming session windows: {n_sessions:,} merged sessions, "
@@ -124,7 +121,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    frames = STAGED["video_mjpeg_frame_extract"](spark, sf_dir)
+    frames = QUERIES["video_mjpeg_frame_extract"](spark, sf_dir)
     n_frames = frames.count()
     print(
         f"[10] video: {n_frames:,} MJPEG frames extracted from real "

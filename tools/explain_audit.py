@@ -214,10 +214,8 @@ ROUND16_AUDIT = [
     "curation_pipeline_v4_composed",  # PAV 20-bin keep stage + v3 chain
 ]
 
-# staged rows with plan-shape claims worth pinning before they
-# rotate into the graded head (plans/next_round.py) — this list
-# tracks the CURRENT staging area only
-STAGED_AUDIT = [
+# later rows with plan-shape claims worth pinning
+LATE_AUDIT = [
     "supervised_discretization_merge_sweep",  # bounded bin frame, pair test, island prefix-sum
     "seasonal_cusum_residual_flags",  # bounded dow medians broadcast, per-type windows
     "rrf_weighted_fusion_exact",  # bounded slice + 1-row weight scalar
@@ -256,10 +254,6 @@ def main() -> None:
     activate()
     spark = get_spark(SessionConfig(shuffle_partitions=8, app_name="audit"))
     queries = entrymod.queries()
-    try:
-        from sparkksqldbbenchmark_spark.plans.next_round import STAGED
-    except ImportError:
-        STAGED = {}
     out = [
         "# PLANS — physical-plan audit (generated by tools/explain_audit.py)",
         "",
@@ -269,13 +263,10 @@ def main() -> None:
         "for top-k, and no `CartesianProduct` anywhere.",
         "",
     ]
-    staged_names = [f"staged:{n}" for n in STAGED_AUDIT if n in STAGED]
-    for name in AUDIT + ROUND6_AUDIT + ROUND7_AUDIT + ROUND8_AUDIT + ROUND10_AUDIT + ROUND12_AUDIT + ROUND13_AUDIT + ROUND14_AUDIT + ROUND15_AUDIT + ROUND16_AUDIT + staged_names:
-        fn = (
-            STAGED[name.removeprefix("staged:")]
-            if name.startswith("staged:")
-            else queries[name]
-        )
+    names = AUDIT + ROUND6_AUDIT + ROUND7_AUDIT + ROUND8_AUDIT + ROUND10_AUDIT + ROUND12_AUDIT + ROUND13_AUDIT + ROUND14_AUDIT + ROUND15_AUDIT + ROUND16_AUDIT
+    names += [n for n in LATE_AUDIT if n not in names]
+    for name in names:
+        fn = queries[name]
         df = fn(spark, "/root/testdata/sf0.01")
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -283,7 +274,7 @@ def main() -> None:
         out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
     with open("/root/repo/docs/PLANS.md", "w") as f:
         f.write("\n".join(out))
-    print(f"wrote docs/PLANS.md ({len(AUDIT) + len(ROUND6_AUDIT) + len(ROUND7_AUDIT) + len(ROUND8_AUDIT) + len(ROUND10_AUDIT) + len(ROUND12_AUDIT) + len(ROUND13_AUDIT) + len(ROUND14_AUDIT) + len(ROUND15_AUDIT) + len(ROUND16_AUDIT) + len(staged_names)} plans)")
+    print(f"wrote docs/PLANS.md ({len(names)} plans)")
 
 
 if __name__ == "__main__":

@@ -126,12 +126,6 @@ def main() -> None:
     rows = []
     failures = []
     audit_items = list(entrymod.queries().items())
-    try:  # a future staging area, if one exists, rides along un-graded
-        from sparkksqldbbenchmark_spark.plans.next_round import STAGED
-
-        audit_items += [(f"staged:{n}", fn) for n, fn in STAGED.items()]
-    except ImportError:
-        pass
     for name, fn in audit_items:
         try:
             plan = (

@@ -38,13 +38,6 @@ def main() -> None:
     spark.range(1_000_000).count()
     spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
     queries = entrymod.queries()
-    try:
-        from sparkksqldbbenchmark_spark.plans.next_round import STAGED
-
-        queries = dict(queries)
-        queries.update(STAGED)
-    except ImportError:
-        pass
     run_dir = stage_bench_layout(spark, SF_DIR)
     first = queries.get(names[0])
     first(spark, run_dir).count()  # discarded warm-up
