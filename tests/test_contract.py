@@ -1,11 +1,22 @@
 """Driver-contract invariants: the registry must stay well-formed —
-every oracle key names a query, names are unique and stable, entry()
-uses a registered query, and the cluster profile emits sane conf."""
+every oracle key names a query, names are unique and stable, the graded
+head is fixed, the golden file still describes the current oracles and
+data, entry() uses a registered query, and the cluster profile emits
+sane conf."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import __spark_entry__ as entrymod
 from sparkksqldbbenchmark_spark.session import cluster_profile
+from tests.golden import GOLDEN, SF_DIRS
+from tools.check_correctness import GOLDEN_SFS, golden_header
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_registry_well_formed():
@@ -27,6 +38,58 @@ def test_registry_order_fits_driver_window():
     fails to import fails loudly instead of shifting the window."""
     assert len(set(entrymod.HEAD)) == len(entrymod.HEAD) == 50
     assert list(entrymod.queries())[:50] == list(entrymod.HEAD)
+
+
+def test_graded_head_is_exactly_the_planned_cohort():
+    """The driver imports __spark_entry__ in a fresh interpreter, where
+    plan modules load in import order rather than in the order other
+    test modules happened to import them. Check the first 50 there, and
+    that every graded query has an oracle-verified record at each SF."""
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json, __spark_entry__ as e; "
+         "print(json.dumps(list(e.queries())[:50]))"],
+        cwd=REPO, capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    assert json.loads(out.strip().splitlines()[-1]) == list(entrymod.HEAD)
+    oracles = entrymod.oracle_sql()
+    for sf in GOLDEN_SFS:
+        unrecorded = [
+            n for n in entrymod.HEAD
+            if n not in oracles or n not in GOLDEN[sf]["queries"]
+        ]
+        assert not unrecorded, f"{sf}: graded without a record: {unrecorded}"
+
+
+def _current_headers() -> dict[str, dict]:
+    oracles = entrymod.oracle_sql()
+    return {sf: golden_header(d, oracles) for sf, d in SF_DIRS.items()}
+
+
+def test_shared_infra_unchanged_since_green_verdict():
+    """The inputs every oracle shares, the table files and the DuckDB
+    version, are the ones the recording sweep ran against; otherwise the
+    golden results no longer stand for the oracles' output."""
+    assert sorted(GOLDEN) == sorted(SF_DIRS) == sorted(GOLDEN_SFS)
+    for sf, want in _current_headers().items():
+        assert GOLDEN[sf]["duckdb_version"] == want["duckdb_version"], sf
+        assert GOLDEN[sf]["tables"] == want["tables"], f"{sf}: table files moved"
+
+
+def test_tail_source_unchanged_since_green_verdict():
+    """The golden file records exactly the registered queries, and each
+    oracle's SQL text is the one its recorded result was verified
+    against. Any change fails here until a full passing sweep records
+    the results again."""
+    names = sorted(entrymod.queries())
+    for sf, want in _current_headers().items():
+        section = GOLDEN[sf]
+        assert sorted(section["queries"]) == names, f"{sf}: query set moved"
+        moved = sorted(
+            n for n in want["oracles"].keys() | section["oracles"].keys()
+            if section["oracles"].get(n) != want["oracles"].get(n)
+        )
+        assert not moved, f"{sf}: oracle SQL moved: {moved}"
 
 
 def test_container_type_gate_rejects_planted_array_column(spark):

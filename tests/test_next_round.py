@@ -1,80 +1,27 @@
-"""Oracle verification for the round-11 staging area (plans/next_round.py).
-
-Runs every staged query on Spark and its DuckDB oracle twin over the same
-sf0.001 parquet, comparing row count, sorted column names, and the
-order-insensitive canonical value hash — the identical procedure
-tools/check_correctness.py replicates from the driver. A staged query is
-rotation-ready only when it passes here (and at sf0.01/sf0.1 via
-CHECK_SF_DIR). Cohort-specific invariant tests move to the graduated
-cohort's test module on rotation (see tests/test_round8_queries.py).
-"""
+"""The queries of plans/next_round.py are registered like every other:
+each has a DuckDB oracle and an oracle-verified golden record at both
+scale factors, so tests/test_reference_queries.py checks their results."""
 
 from __future__ import annotations
 
-import os
-import sys
+import __spark_entry__ as entrymod
+from tests.golden import GOLDEN
+from tools.check_correctness import GOLDEN_SFS
 
-import duckdb
-import pytest
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-
-from check_correctness import TABLES, canon_rows  # noqa: E402
-
-from sparkksqldbbenchmark_spark.plans.next_round import (  # noqa: E402
-    STAGED,
-    STAGED_ORACLE,
-)
-
-SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    yield con
-    con.close()
+NEXT_ROUND = {
+    "team_draft_interleave_k6_generated",
+    "good_turing_frequency_smoothing",
+    "winnowing_fingerprint_dedup_certified",
+    "bpe_apply_frozen_merges_tokenization",
+    "edit2_double_deletion_join_complete",
+}
 
 
 def test_every_staged_query_has_oracle():
-    # empty is legitimate right after a graduation (rounds 6-9 emptied
-    # the area on rotation); new staging lands here as the round runs
-    assert set(STAGED) == set(STAGED_ORACLE)
-
-
-@pytest.mark.parametrize("name", sorted(STAGED) or [None])
-def test_staged_query_matches_oracle(spark, duck, name):
-    if name is None:
-        pytest.skip("staging area empty (fresh post-graduation state)")
-    from check_correctness import container_columns
-
-    sdf = STAGED[name](spark, SF_DIR)
-    assert container_columns(sdf) == [], (
-        f"{name}: container-typed result column — the driver's comparator "
-        f"cannot hash it; serialize at the query boundary"
-    )
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(STAGED_ORACLE[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), (
-        f"{name}: rows {len(srows)} vs oracle {len(orows)}"
-    )
-    sh, slines = canon_rows(scols, srows)
-    oh, olines = canon_rows(ocols, orows)
-    if sh != oh:
-        diff = [
-            f"  spark: {a}\n  duck : {b}"
-            for a, b in zip(slines, olines)
-            if a != b
-        ][:5]
-        pytest.fail(f"{name}: value hash mismatch\n" + "\n".join(diff))
-    assert len(srows) > 0, f"{name}: empty result"
+    mod = "sparkksqldbbenchmark_spark.plans.next_round"
+    here = {n for n, fn in entrymod.queries().items() if fn.__module__ == mod}
+    assert here == NEXT_ROUND
+    assert NEXT_ROUND <= set(entrymod.oracle_sql())
+    assert NEXT_ROUND.isdisjoint(entrymod.HEAD)
+    for sf in GOLDEN_SFS:
+        assert NEXT_ROUND <= set(GOLDEN[sf]["queries"]), sf

@@ -6,8 +6,8 @@ oracle. An oracle's output depends only on its SQL text, the table files
 and the DuckDB version, and the file holds a digest of each; so a Spark
 result equal to its golden record equals the oracle's result, and no
 DuckDB runs here. Any change to an oracle, to the data or to the registry
-fails test_golden_file_is_current until a full passing sweep records the
-results again.
+fails the golden-header checks in tests/test_contract.py until a full
+passing sweep records the results again.
 
 Test ids name the query; sf0.01 cases carry an ``sf0.01-`` prefix.
 """
@@ -17,8 +17,8 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.golden import GOLDEN, SF_DIRS, assert_matches_golden
-from tools.check_correctness import GOLDEN_SFS, golden_header
+from tests.golden import assert_matches_golden
+from tools.check_correctness import GOLDEN_SFS
 
 NAMES = sorted(entrymod.queries())
 
@@ -28,22 +28,6 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "avg_value" in df.columns
-
-
-def test_golden_file_is_current():
-    assert sorted(GOLDEN) == sorted(SF_DIRS) == sorted(GOLDEN_SFS)
-    oracles = entrymod.oracle_sql()
-    for sf, sf_dir in SF_DIRS.items():
-        section = GOLDEN[sf]
-        assert sorted(section["queries"]) == NAMES, f"{sf}: query set moved"
-        want = golden_header(sf_dir, oracles)
-        assert section["duckdb_version"] == want["duckdb_version"], sf
-        assert section["tables"] == want["tables"], f"{sf}: table files moved"
-        moved = sorted(
-            n for n in oracles | section["oracles"]
-            if section["oracles"].get(n) != want["oracles"].get(n)
-        )
-        assert not moved, f"{sf}: oracle SQL moved: {moved}"
 
 
 @pytest.mark.parametrize(
