@@ -9,15 +9,15 @@ reference's exact conventions:
 - std-dev divides by N (population, :286-287);
 - top-5 highest-latency windows (:383-391).
 
-The reference collects everything into a driver-side ListBuffer; here the
-data never leaves the executors until the final handful of scalars.
+The reference collects everything into a driver-side ListBuffer; here one
+aggregate returns the scalars and the sorted latencies.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # The monitor's validity bounds (LatencyMonitor.scala:217-221)
@@ -42,33 +42,6 @@ def valid_latency_points(
             > F.unix_timestamp(F.lit(MIN_TS).cast("timestamp")) * 1000
         )
     )
-
-
-def nearest_rank_percentiles(
-    df: DataFrame, col: str, ps: tuple[float, ...] = (0.5, 0.95, 0.99)
-) -> dict[str, float]:
-    """The reference's index-based percentiles in one pass: rank every row
-    once, pick the floor(n·p) indices (clamped). One sort-shuffle total,
-    regardless of how many percentiles are requested."""
-    n = F.count(F.lit(1)).over(Window.partitionBy())
-    rn = F.row_number().over(Window.partitionBy().orderBy(col))
-    ranked = df.select(
-        F.col(col), rn.alias("__rn"), n.alias("__n")
-    )
-    flag = None
-    for p in ps:
-        c = F.col("__rn") - 1 == F.least(
-            F.floor(F.col("__n") * F.lit(p)), F.col("__n") - 1
-        )
-        flag = c if flag is None else (flag | c)
-    rows = ranked.where(flag).collect()
-    out: dict[str, float] = {}
-    for p in ps:
-        for r in rows:
-            idx = min(int(r["__n"] * p), r["__n"] - 1)
-            if r["__rn"] - 1 == idx:
-                out[f"p{str(p).replace('0.', '')}"] = float(r[col])
-    return out
 
 
 @dataclass
@@ -100,23 +73,31 @@ class LatencyMetrics:
 
 
 def calculate_metrics(valid: DataFrame, col: str = "latency_ms") -> LatencyMetrics:
-    basic = valid.agg(
+    """Every metric from one aggregate. The percentiles index the sorted
+    latencies, which the monitor holds one per micro-batch, so they fit in
+    one aggregation buffer."""
+    r = valid.agg(
         F.count(F.lit(1)).alias("n"),
         F.avg(col).alias("avg"),
         F.min(col).alias("mn"),
         F.max(col).alias("mx"),
         F.stddev_pop(col).alias("sd"),
+        F.sort_array(F.collect_list(col)).alias("sorted"),
     ).collect()[0]
-    pcts = nearest_rank_percentiles(valid, col)
+    xs = r["sorted"]
+
+    def pct(p: float) -> float:
+        return float(xs[min(int(len(xs) * p), len(xs) - 1)]) if xs else 0.0
+
     return LatencyMetrics(
-        sample_count=basic["n"],
-        avg_ms=float(basic["avg"] or 0.0),
-        min_ms=float(basic["mn"] or 0.0),
-        max_ms=float(basic["mx"] or 0.0),
-        stddev_ms=float(basic["sd"] or 0.0),
-        p50_ms=pcts.get("p5", 0.0),
-        p95_ms=pcts.get("p95", 0.0),
-        p99_ms=pcts.get("p99", 0.0),
+        sample_count=r["n"],
+        avg_ms=float(r["avg"] or 0.0),
+        min_ms=float(r["mn"] or 0.0),
+        max_ms=float(r["mx"] or 0.0),
+        stddev_ms=float(r["sd"] or 0.0),
+        p50_ms=pct(0.5),
+        p95_ms=pct(0.95),
+        p99_ms=pct(0.99),
     )
 
 

@@ -78,6 +78,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_nanos(df)
 
 
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers from one Parquet file's footer, from the
+    memo load_table keeps."""
+    key = _schema_key(spark, path)
+    schema = _schema_memo_get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _schema_memo_put(key, schema)
+    return schema
+
+
 # Session confs that change the schema Spark infers from a Parquet footer.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

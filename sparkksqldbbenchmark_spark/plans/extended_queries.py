@@ -1906,14 +1906,14 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     eligible = ps.join(
         F.broadcast(region_supp), ps.ps_suppkey == region_supp.s_suppkey
     )
-    min_cost = eligible.groupBy("ps_partkey").agg(
+    min_cost = eligible.groupBy(F.col("ps_partkey").alias("mc_partkey")).agg(
         F.min("ps_supplycost").alias("mc")
     )
     best = eligible.join(
         min_cost,
-        (eligible.ps_partkey == min_cost.ps_partkey)
+        (eligible.ps_partkey == min_cost.mc_partkey)
         & (eligible.ps_supplycost == min_cost.mc),
-    ).drop(min_cost.ps_partkey)
+    ).drop("mc_partkey")
     return (
         best.join(F.broadcast(p), best.ps_partkey == p.p_partkey)
         .select(

@@ -2781,11 +2781,10 @@ def streaming_checkpoint_restart_resume(
     for f in files[:2]:
         shutil.copy(f, src)
 
-    schema = spark.read.parquet(staging).schema
-
     def agg_stream():
         stream = (
-            spark.readStream.schema(schema)
+            # the file source makes every column nullable, as a read-back would
+            spark.readStream.schema(ev.schema)
             .option("pathGlobFilter", "*.parquet")
             .parquet(src)
         )

@@ -2000,13 +2000,13 @@ def hard_negative_mining_topk(
     anchors = q.where(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
-        "j",
+        F.col("j").alias("anchor_j"),
         F.col("qv").alias("aqv"),
     )
     dots = (
         q.join(
             F.broadcast(anchors),
-            (q["j"] == anchors["j"])
+            (q["j"] == anchors["anchor_j"])
             & (q["label"] != anchors["anchor_label"]),
         )
         .groupBy("anchor_id", "vec_id")

@@ -2657,13 +2657,15 @@ def cohens_kappa_exact(
         ),
     )
     rows_m = cells.groupBy("source", "a").agg(F.sum("n").alias("rn"))
-    cols_m = cells.groupBy("source", "b").agg(F.sum("n").alias("cn"))
+    cols_m = cells.groupBy(F.col("source").alias("col_source"), "b").agg(
+        F.sum("n").alias("cn")
+    )
     chance = (
         rows_m.join(
             cols_m,
-            (rows_m.source == cols_m.source) & (rows_m.a == cols_m.b),
+            (rows_m.source == cols_m.col_source) & (rows_m.a == cols_m.b),
         )
-        .groupBy(rows_m.source.alias("source"))
+        .groupBy("source")
         .agg(F.sum(F.col("rn") * F.col("cn")).alias("chance"))
     )
     return (

@@ -618,7 +618,8 @@ def recursive_cte_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         WITH RECURSIVE anc(node, cur, depth) AS (
-            SELECT DISTINCT user_id, user_id, 0 FROM __rec_events
+            SELECT DISTINCT user_id AS node, user_id AS cur, 0 AS depth
+            FROM __rec_events
             UNION ALL
             SELECT node, cur DIV 2, depth + 1 FROM anc WHERE cur > 1
         )

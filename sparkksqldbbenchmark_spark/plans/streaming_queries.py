@@ -15,7 +15,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkksqldbbenchmark_spark.catalog import _normalize_nanos
+from sparkksqldbbenchmark_spark.catalog import _normalize_nanos, parquet_schema
 from sparkksqldbbenchmark_spark.functions.stable import (
     sql_stable_avg,
     sql_stable_sum,
@@ -31,10 +31,9 @@ _FMT = "'%Y-%m-%d %H:%M:%S'"
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stand-in for the Kafka topic (S1 —
     SparkWeatherConsumer.scala:172-183; test harness substitution per
-    SURVEY §2.1). Schema comes from a batch footer read: streaming file
-    sources require an explicit schema."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    SURVEY §2.1). Schema comes from the file's footer (memoized by the
+    catalog): streaming file sources require an explicit schema."""
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # the file source requires a directory: stream the sf dir, filtered to
     # the events file
     stream = (
@@ -175,10 +174,11 @@ def streaming_update_mode_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     d = tempfile.mkdtemp(prefix="upd_stream_")
-    events.repartition(4, "event_id").write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
+    layout = events.repartition(4, "event_id")
+    layout.write.mode("overwrite").parquet(d)
     stream = (
-        spark.readStream.schema(schema)
+        # the file source makes every column nullable, as a read-back would
+        spark.readStream.schema(layout.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
     )

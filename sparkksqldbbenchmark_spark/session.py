@@ -10,9 +10,19 @@ for the Pandas-UDF extension surface.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
+import logging
 import os
+import shlex
+import shutil
+import subprocess
+import uuid
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 
@@ -88,8 +98,222 @@ def cluster_profile(**overrides) -> SessionConfig:
     return cfg
 
 
+# ---------------------------------------------------------------- start-up --
+# Most of a driver JVM's start-up goes to loading and verifying the classes
+# of $SPARK_HOME/jars. A dynamic class-data-sharing (CDS) archive (JEP 350),
+# which the JVM writes itself when a run exits, lets every later run map
+# those classes instead. One archive per machine and key lives under
+# ${XDG_CACHE_HOME:-~/.cache}/sparkksqldbbenchmark_spark/cds/:
+#
+#   <key>.jsa                    published; mapped with -Xshare:auto
+#   pending-<key>-<id>.jsa       being written at the exit of one JVM
+#   pending-<key>-<id>.json      its writer's pid and classpath
+#
+# A pending archive is published (os.replace) only after its writer is gone
+# and a JVM maps it with -Xshare:on and a checksum pass; otherwise it is
+# deleted. So no JVM maps a half-written archive (a writer killed in its
+# dump, or two first runs racing) or one of another key.
+
+_LOG = logging.getLogger(__name__)
+_CLASSPATH_CONFS = ("spark.jars", "spark.jars.packages", "spark.driver.extraClassPath")
+_CLASSPATH_ARGS = ("--jars", "--packages", "--driver-class-path") + _CLASSPATH_CONFS
+# the launcher appends these to the driver classpath too
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+# a dump logs about a thousand [warning][cds] lines to stdout at JVM exit
+_CDS_QUIET = "-Xlog:cds*=off"
+
+
+@dataclass
+class _CdsPlan:
+    options: str  # appended to spark.driver.extraJavaOptions
+    conf_dir: str  # the empty SPARK_CONF_DIR the launch runs with
+    key: str
+    sidecar: str | None  # set when this launch writes a pending archive
+
+
+def _cds_dir() -> str:
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache")
+    return os.path.join(cache, "sparkksqldbbenchmark_spark", "cds")
+
+
+def _java() -> str | None:
+    """The java binary bin/spark-class runs."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def _cds_key(java: str, spark_home: str) -> str:
+    """Hash of the Java identity, $SPARK_HOME and its jars' names and sizes."""
+    h = hashlib.sha256()
+    release = os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(java))),
+                           "release")
+    try:
+        with open(release, "rb") as f:
+            h.update(f.read())
+    except OSError:
+        h.update(subprocess.run([java, "-version"], capture_output=True).stderr)
+    h.update(spark_home.encode())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        h.update(f"\0{name}\0{os.path.getsize(os.path.join(jars, name))}".encode())
+    return h.hexdigest()[:20]
+
+
+def _cds_skip_reason(conf: dict[str, str], conf_dir: str) -> str | None:
+    """Why CDS cannot apply to this launch, or None."""
+    submit = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    added = [k for k in _CLASSPATH_CONFS if conf.get(k)]
+    added += [a for a in submit if a.split("=", 1)[0] in _CLASSPATH_ARGS]
+    added += [v for v in _CLASSPATH_ENV if os.environ.get(v)]
+    if added:
+        return f"driver classpath entries added by {', '.join(added)}"
+    opts = conf.get("spark.driver.extraJavaOptions", "")
+    if any(f in opts for f in ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")):
+        return "spark.driver.extraJavaOptions sets its own class-data sharing"
+    # CDS refuses a non-empty directory on the classpath, and the launcher
+    # always puts the conf dir on it
+    names = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
+    kept = sorted(n for n in names if not n.endswith(".template"))
+    if kept:
+        return f"conf dir {conf_dir} holds {kept[0]}"
+    return None
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _maps_cleanly(java: str, archive: str, classpath: str, cds: str) -> bool:
+    """Whether a JVM on the writer's classpath maps the archive with every
+    region's checksum intact (a truncated archive crashes it: no hs_err)."""
+    cmd = [java, "-Xshare:on", f"-XX:SharedArchiveFile={archive}",
+           "-XX:+VerifySharedSpaces", f"-XX:ErrorFile={os.devnull}",
+           "-cp", classpath, "-version"]
+    try:
+        return subprocess.run(cmd, cwd=cds, capture_output=True,
+                              timeout=120).returncode == 0
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+
+
+def _settle_pending(cds: str, key: str, java: str) -> None:
+    """Publish or delete every pending archive whose writer is gone."""
+    for sidecar in glob.glob(os.path.join(cds, "pending-*.json")):
+        archive = sidecar[:-len(".json")] + ".jsa"
+        try:
+            with open(sidecar) as f:
+                meta = json.load(f)
+            writer = int(meta["pid"])
+        except (OSError, ValueError, KeyError, TypeError):
+            continue  # taken by another process, or not ours
+        if _pid_alive(writer):
+            continue
+        if not os.path.exists(archive):
+            problem = None  # the writer never dumped (killed or failed)
+        elif meta.get("key") != key:
+            problem = "stale key"
+        elif "classpath" not in meta:
+            problem = "its launch did not finish"
+        elif not _maps_cleanly(java, archive, meta["classpath"], cds):
+            problem = "a JVM does not map it cleanly"
+        else:
+            try:
+                os.replace(archive, os.path.join(cds, f"{key}.jsa"))
+            except FileNotFoundError:
+                pass  # another process published it first
+            problem = None
+        if problem:
+            _LOG.warning("class-data sharing: deleted pending archive %s: %s",
+                         os.path.basename(archive), problem)
+        for path in (archive, sidecar):
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
+
+
+def _cds_plan(conf: dict[str, str]) -> _CdsPlan | None:
+    """How to launch the driver JVM with a CDS archive, or None (after one
+    log line) where it cannot be used."""
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    cds = _cds_dir()
+    empty = os.path.join(cds, "conf")  # a fixed path: the archive records it
+    java = _java()
+    try:
+        reason = _cds_skip_reason(conf, conf_dir) or (
+            None if java else "no java binary found")
+        if reason is None:
+            os.makedirs(empty, exist_ok=True)
+            if not os.access(cds, os.W_OK):
+                reason = f"cache dir {cds} is not writable"
+            elif os.listdir(empty):
+                reason = f"{empty} is not empty"
+        if reason is None:
+            key = _cds_key(java, spark_home)
+            _settle_pending(cds, key, java)
+            published = os.path.join(cds, f"{key}.jsa")
+            if os.path.exists(published):
+                return _CdsPlan(f"-XX:SharedArchiveFile={published} -Xshare:auto "
+                                f"{_CDS_QUIET}", empty, key, None)
+            stem = os.path.join(cds, f"pending-{key}-{os.getpid()}-{uuid.uuid4().hex[:8]}")
+            _write_json(stem + ".json", {"key": key, "pid": os.getpid()})
+            return _CdsPlan(f"-XX:ArchiveClassesAtExit={stem}.jsa "
+                            f"-XX:+VerifySharedSpaces {_CDS_QUIET}",
+                            empty, key, stem + ".json")
+    except OSError as e:
+        reason = f"cache dir {cds}: {e}"
+    _LOG.warning("class-data sharing off for this driver JVM: %s", reason)
+    return None
+
+
+def _launch(builder, conf: dict[str, str]) -> SparkSession:
+    """getOrCreate for a call that starts the driver JVM: with a CDS archive
+    where one can be used."""
+    plan = _cds_plan(conf)
+    if plan is None:
+        return builder.getOrCreate()
+    opts = conf.get("spark.driver.extraJavaOptions", "")
+    builder = builder.config("spark.driver.extraJavaOptions",
+                             f"{opts} {plan.options}".strip())
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if plan.sidecar:
+        # the JVM writes the archive when it exits; name it the writer
+        jvm = spark.sparkContext._jvm
+        _write_json(plan.sidecar, {
+            "key": plan.key,
+            "pid": int(jvm.java.lang.ProcessHandle.current().pid()),
+            "classpath": jvm.java.lang.System.getProperty("java.class.path")})
+    return spark
+
+
 def get_spark(config: SessionConfig | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine configuration."""
+    """Build (or reuse) a SparkSession with the engine configuration.
+
+    A call that starts the driver JVM starts it from a class-data-sharing
+    archive (see above); one that finds a JVM running changes no option and
+    no environment variable."""
     config = config or SessionConfig()
     builder = SparkSession.builder.appName(config.app_name)
     if config.master:
@@ -97,6 +321,10 @@ def get_spark(config: SessionConfig | None = None) -> SparkSession:
     elif not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         builder = builder.master(f"local[{cpus}]")
-    for k, v in config.to_conf().items():
+    conf = config.to_conf()
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    if (SparkContext._gateway is not None or SparkContext._active_spark_context
+            or os.environ.get("PYSPARK_GATEWAY_PORT") or os.environ.get("SPARK_REMOTE")):
+        return builder.getOrCreate()
+    return _launch(builder, conf)

@@ -8,9 +8,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
+import re
+import tempfile
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MED
 
 QUERIES = entrymod.queries()
 
@@ -529,3 +532,58 @@ def test_tpch_q3_no_sorts(spark):
     import re as _re
 
     assert not _re.search(r"\bSort \[", plan), plan
+
+
+def test_self_joins_do_not_rely_on_auto_resolution(spark):
+    """Each of these joins a DataFrame with one derived from it. Their
+    join keys must name distinct attributes on the two sides: with
+    Spark's self-join auto-resolution off, no equality in the analyzed
+    plan may compare an attribute with itself (a trivially true
+    predicate)."""
+    names = ("tpch_q2_min_cost_supplier", "hard_negative_mining_topk",
+             "cohens_kappa_exact")
+    spark.conf.set("spark.sql.selfJoinAutoResolveAmbiguity", "false")
+    try:
+        for name in names:
+            df = QUERIES[name](spark, SF_DIR)
+            plan = df._jdf.queryExecution().analyzed().toString()
+            pairs = re.findall(r"\(([\w.]+#\d+L?) = ([\w.]+#\d+L?)\)", plan)
+            assert pairs, name
+            assert all(a != b for a, b in pairs), (name, pairs)
+    finally:
+        spark.conf.unset("spark.sql.selfJoinAutoResolveAmbiguity")
+
+
+@contextlib.contextmanager
+def jvm_warnings(spark, logger_name: str):
+    """Collect what a JVM logger logs at WARN or above into a list."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    lines: list[str] = []
+    path = os.path.join(tempfile.mkdtemp(prefix="jvm_log_"), "warn.log")
+    appender = (log4j.core.appender.FileAppender.newBuilder()
+                .setName(f"capture-{os.path.basename(os.path.dirname(path))}")
+                .withFileName(path).build())
+    appender.start()
+    logger = log4j.LogManager.getContext(False).getLogger(logger_name)
+    level = logger.getLevel()
+    logger.addAppender(appender)
+    logger.setLevel(log4j.Level.WARN)
+    try:
+        yield lines
+    finally:
+        logger.removeAppender(appender)
+        logger.setLevel(level)
+        appender.stop()
+        with open(path) as f:
+            lines.extend(f.read().splitlines())
+
+
+def test_recursive_cte_checkpoint_keeps_its_output(spark):
+    """Each recursion step of recursive_cte_closure is checkpointed as a
+    LogicalRDD. Spark warns when the checkpointed plan's output cannot be
+    matched to its optimized plan's, which a duplicated anchor column
+    (SELECT DISTINCT user_id, user_id, ...) causes; at sf0.01 the steps
+    are large enough to be checkpointed."""
+    with jvm_warnings(spark, "org.apache.spark.sql.execution.LogicalRDD") as lines:
+        assert QUERIES["recursive_cte_closure"](spark, SF_DIR_MED).count() > 0
+    assert not [ln for ln in lines if "output columns are expected" in ln], lines

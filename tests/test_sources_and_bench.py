@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import math
 import os
+import statistics
 import tempfile
 import zipfile
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sparkksqldbbenchmark_spark.bench import latency, reports
@@ -125,6 +129,45 @@ def test_latency_metrics_reference_convention(spark):
     assert '"avg_ms": 5500.0' in reports.json_report(m)
     prom = reports.prometheus_text(m)
     assert "benchmark_latency_p99_ms 10000.0" in prom
+
+
+_BASE_MS = 1_700_000_000_000
+_LATENCY = st.one_of(st.integers(1, 8), st.integers(1, 599_999))  # ties, spread
+_POINT = st.one_of(
+    st.tuples(st.just(_BASE_MS), _LATENCY),
+    # dirty: out of the validity bounds, pre-2020 producer ts, no end ts
+    st.tuples(st.just(_BASE_MS), st.sampled_from([0, -3, 600_000, 900_000])),
+    st.tuples(st.just(100), _LATENCY),
+    st.tuples(st.just(_BASE_MS), st.none()),
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(points=st.lists(_POINT, max_size=25))
+@example(points=[])
+@example(points=[(_BASE_MS, 7)])
+@example(points=[(_BASE_MS, 5)] * 4 + [(_BASE_MS, 3), (_BASE_MS, 0)])
+def test_latency_metrics_match_python_nearest_rank(spark, points):
+    """calculate_metrics after the validity filter equals the monitor's
+    arithmetic done in plain Python: 0-based floor(n·p) index into the
+    sorted latencies, clamped to n-1; population stddev; zeros when no
+    point is valid."""
+    rows = [(s, None if lat is None else s + lat) for s, lat in points]
+    df = spark.createDataFrame(rows, "min_producer_ts long, processing_end_ts long")
+    m = latency.calculate_metrics(latency.valid_latency_points(df))
+    xs = sorted(lat for s, lat in points if lat is not None and 0 < lat < 600_000
+                and s > 1_577_836_800_000)  # 2020-01-01 UTC
+    n = len(xs)
+
+    def rank(p):
+        return float(xs[min(int(n * p), n - 1)]) if xs else 0.0
+
+    assert m.sample_count == n
+    assert (m.p50_ms, m.p95_ms, m.p99_ms) == (rank(0.5), rank(0.95), rank(0.99))
+    assert (m.min_ms, m.max_ms) == ((xs[0], xs[-1]) if xs else (0.0, 0.0))
+    assert math.isclose(m.avg_ms, statistics.fmean(xs) if xs else 0.0, rel_tol=1e-12)
+    assert math.isclose(m.stddev_ms, statistics.pstdev(xs) if xs else 0.0,
+                        rel_tol=1e-9, abs_tol=1e-9)
 
 
 def test_metrics_server_serves_prometheus_over_http(spark):
