@@ -20,9 +20,9 @@ single-file table in a bounded LRU keyed by
 - the session's values of the confs that change Parquet schema
   inference (_INFERENCE_CONFS).
 
-A miss runs exactly `spark.read.parquet(path)`; a hit loads with
-`spark.read.schema(cached).parquet(path)`. Directory datasets and paths
-this process cannot open as a local file are inferred on every load.
+A miss infers with `spark.read.parquet(path)`; every load then reads
+with `spark.read.schema(schema).parquet(path)`. Directory datasets and
+paths this process cannot open as a local file are inferred on every load.
 """
 
 from __future__ import annotations
@@ -68,14 +68,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _schema_key(spark, path)
-    schema = _schema_memo_get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _schema_memo_put(key, df.schema)
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    return _normalize_nanos(df)
+    return _normalize_nanos(spark.read.schema(parquet_schema(spark, path)).parquet(path))
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:

@@ -10,15 +10,14 @@ for the Pandas-UDF extension surface.
 
 from __future__ import annotations
 
-import glob
+import atexit
 import hashlib
-import json
 import logging
 import os
 import shlex
 import shutil
 import subprocess
-import uuid
+import sys
 from dataclasses import dataclass, field
 
 from pyspark import SparkContext
@@ -100,19 +99,14 @@ def cluster_profile(**overrides) -> SessionConfig:
 
 # ---------------------------------------------------------------- start-up --
 # Most of a driver JVM's start-up goes to loading and verifying the classes
-# of $SPARK_HOME/jars. A dynamic class-data-sharing (CDS) archive (JEP 350),
-# which the JVM writes itself when a run exits, lets every later run map
-# those classes instead. One archive per machine and key lives under
-# ${XDG_CACHE_HOME:-~/.cache}/sparkksqldbbenchmark_spark/cds/:
-#
-#   <key>.jsa                    published; mapped with -Xshare:auto
-#   pending-<key>-<id>.jsa       being written at the exit of one JVM
-#   pending-<key>-<id>.json      its writer's pid and classpath
-#
-# A pending archive is published (os.replace) only after its writer is gone
-# and a JVM maps it with -Xshare:on and a checksum pass; otherwise it is
-# deleted. So no JVM maps a half-written archive (a writer killed in its
-# dump, or two first runs racing) or one of another key.
+# of $SPARK_HOME/jars. A dynamic class-data-sharing (CDS) archive (JEP 350)
+# lets a JVM map those classes instead. One archive per machine and key
+# lives under ${XDG_CACHE_HOME:-~/.cache}/sparkksqldbbenchmark_spark/cds/
+# as <key>.jsa. A launch that finds none starts without it and, when its
+# process exits, runs cds_training: a JVM that always runs the same work
+# writes the archive, and it is published only after a JVM maps it
+# cleanly. So what the archive holds does not depend on which program
+# started the engine first, and no JVM maps a half-written archive.
 
 _LOG = logging.getLogger(__name__)
 _CLASSPATH_CONFS = ("spark.jars", "spark.jars.packages", "spark.driver.extraClassPath")
@@ -121,14 +115,9 @@ _CLASSPATH_ARGS = ("--jars", "--packages", "--driver-class-path") + _CLASSPATH_C
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 # a dump logs about a thousand [warning][cds] lines to stdout at JVM exit
 _CDS_QUIET = "-Xlog:cds*=off"
-
-
-@dataclass
-class _CdsPlan:
-    options: str  # appended to spark.driver.extraJavaOptions
-    conf_dir: str  # the empty SPARK_CONF_DIR the launch runs with
-    key: str
-    sidecar: str | None  # set when this launch writes a pending archive
+_TRAINING = "sparkksqldbbenchmark_spark.cds_training"
+_TRAIN_TIMEOUT_S = 240
+_training_registered = False
 
 
 def _cds_dir() -> str:
@@ -144,7 +133,8 @@ def _java() -> str | None:
 
 
 def _cds_key(java: str, spark_home: str) -> str:
-    """Hash of the Java identity, $SPARK_HOME and its jars' names and sizes."""
+    """Hash of the Java identity, $SPARK_HOME, its jars' names and sizes,
+    and the training code."""
     h = hashlib.sha256()
     release = os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(java))),
                            "release")
@@ -157,6 +147,8 @@ def _cds_key(java: str, spark_home: str) -> str:
     jars = os.path.join(spark_home, "jars")
     for name in sorted(os.listdir(jars)):
         h.update(f"\0{name}\0{os.path.getsize(os.path.join(jars, name))}".encode())
+    with open(os.path.join(os.path.dirname(__file__), "cds_training.py"), "rb") as f:
+        h.update(f.read())
     return h.hexdigest()[:20]
 
 
@@ -180,74 +172,34 @@ def _cds_skip_reason(conf: dict[str, str], conf_dir: str) -> str | None:
     return None
 
 
-def _pid_alive(pid: int) -> bool:
+def _train(pid: int) -> None:
+    """Run cds_training and wait for it (at the exit of process ``pid``)."""
+    if os.getpid() != pid:
+        return  # a forked child inherited the hook
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET", "SPARK_REMOTE")}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
     try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
+        r = subprocess.run([sys.executable, "-m", _TRAINING], env=env,
+                           stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+                           stderr=subprocess.PIPE, text=True, timeout=_TRAIN_TIMEOUT_S)
+    except (OSError, subprocess.TimeoutExpired) as e:
+        _LOG.warning("class-data sharing: training failed: %s", e)
+        return
+    ours = [ln for ln in r.stderr.splitlines() if ln.startswith("class-data sharing")]
+    for line in ours:
+        _LOG.warning("%s", line)
+    if r.returncode and not ours:
+        tail = (r.stderr.strip().splitlines() or [""])[-1]
+        _LOG.warning("class-data sharing: training exited with %d: %s", r.returncode, tail)
 
 
-def _maps_cleanly(java: str, archive: str, classpath: str, cds: str) -> bool:
-    """Whether a JVM on the writer's classpath maps the archive with every
-    region's checksum intact (a truncated archive crashes it: no hs_err)."""
-    cmd = [java, "-Xshare:on", f"-XX:SharedArchiveFile={archive}",
-           "-XX:+VerifySharedSpaces", f"-XX:ErrorFile={os.devnull}",
-           "-cp", classpath, "-version"]
-    try:
-        return subprocess.run(cmd, cwd=cds, capture_output=True,
-                              timeout=120).returncode == 0
-    except (OSError, subprocess.TimeoutExpired):
-        return False
-
-
-def _settle_pending(cds: str, key: str, java: str) -> None:
-    """Publish or delete every pending archive whose writer is gone."""
-    for sidecar in glob.glob(os.path.join(cds, "pending-*.json")):
-        archive = sidecar[:-len(".json")] + ".jsa"
-        try:
-            with open(sidecar) as f:
-                meta = json.load(f)
-            writer = int(meta["pid"])
-        except (OSError, ValueError, KeyError, TypeError):
-            continue  # taken by another process, or not ours
-        if _pid_alive(writer):
-            continue
-        if not os.path.exists(archive):
-            problem = None  # the writer never dumped (killed or failed)
-        elif meta.get("key") != key:
-            problem = "stale key"
-        elif "classpath" not in meta:
-            problem = "its launch did not finish"
-        elif not _maps_cleanly(java, archive, meta["classpath"], cds):
-            problem = "a JVM does not map it cleanly"
-        else:
-            try:
-                os.replace(archive, os.path.join(cds, f"{key}.jsa"))
-            except FileNotFoundError:
-                pass  # another process published it first
-            problem = None
-        if problem:
-            _LOG.warning("class-data sharing: deleted pending archive %s: %s",
-                         os.path.basename(archive), problem)
-        for path in (archive, sidecar):
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass
-
-
-def _write_json(path: str, obj: dict) -> None:
-    with open(path + ".tmp", "w") as f:
-        json.dump(obj, f)
-    os.replace(path + ".tmp", path)
-
-
-def _cds_plan(conf: dict[str, str]) -> _CdsPlan | None:
-    """How to launch the driver JVM with a CDS archive, or None (after one
-    log line) where it cannot be used."""
+def _cds_options(conf: dict[str, str]) -> str | None:
+    """The java options that map this key's archive, or None: after one
+    log line where CDS cannot be used, or after arranging training at
+    exit where no archive exists yet."""
+    global _training_registered
     spark_home = _find_spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     cds = _cds_dir()
@@ -263,17 +215,14 @@ def _cds_plan(conf: dict[str, str]) -> _CdsPlan | None:
             elif os.listdir(empty):
                 reason = f"{empty} is not empty"
         if reason is None:
-            key = _cds_key(java, spark_home)
-            _settle_pending(cds, key, java)
-            published = os.path.join(cds, f"{key}.jsa")
+            published = os.path.join(cds, f"{_cds_key(java, spark_home)}.jsa")
             if os.path.exists(published):
-                return _CdsPlan(f"-XX:SharedArchiveFile={published} -Xshare:auto "
-                                f"{_CDS_QUIET}", empty, key, None)
-            stem = os.path.join(cds, f"pending-{key}-{os.getpid()}-{uuid.uuid4().hex[:8]}")
-            _write_json(stem + ".json", {"key": key, "pid": os.getpid()})
-            return _CdsPlan(f"-XX:ArchiveClassesAtExit={stem}.jsa "
-                            f"-XX:+VerifySharedSpaces {_CDS_QUIET}",
-                            empty, key, stem + ".json")
+                return f"-XX:SharedArchiveFile={published} -Xshare:auto {_CDS_QUIET}"
+            if not _training_registered:
+                _training_registered = True
+                atexit.register(_train, os.getpid())
+            _LOG.info("class-data sharing: no archive yet; training at exit")
+            return None
     except OSError as e:
         reason = f"cache dir {cds}: {e}"
     _LOG.warning("class-data sharing off for this driver JVM: %s", reason)
@@ -283,29 +232,20 @@ def _cds_plan(conf: dict[str, str]) -> _CdsPlan | None:
 def _launch(builder, conf: dict[str, str]) -> SparkSession:
     """getOrCreate for a call that starts the driver JVM: with a CDS archive
     where one can be used."""
-    plan = _cds_plan(conf)
-    if plan is None:
+    options = _cds_options(conf)
+    if options is None:
         return builder.getOrCreate()
     opts = conf.get("spark.driver.extraJavaOptions", "")
-    builder = builder.config("spark.driver.extraJavaOptions",
-                             f"{opts} {plan.options}".strip())
+    builder = builder.config("spark.driver.extraJavaOptions", f"{opts} {options}".strip())
     saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+    os.environ["SPARK_CONF_DIR"] = os.path.join(_cds_dir(), "conf")
     try:
-        spark = builder.getOrCreate()
+        return builder.getOrCreate()
     finally:
         if saved is None:
             del os.environ["SPARK_CONF_DIR"]
         else:
             os.environ["SPARK_CONF_DIR"] = saved
-    if plan.sidecar:
-        # the JVM writes the archive when it exits; name it the writer
-        jvm = spark.sparkContext._jvm
-        _write_json(plan.sidecar, {
-            "key": plan.key,
-            "pid": int(jvm.java.lang.ProcessHandle.current().pid()),
-            "classpath": jvm.java.lang.System.getProperty("java.class.path")})
-    return spark
 
 
 def get_spark(config: SessionConfig | None = None) -> SparkSession:
