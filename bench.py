@@ -7,19 +7,25 @@ The metric is total wall-clock over the headline set (lower is better);
 per-query seconds let the driver track regressions. Each query executes
 with a count-style action that materializes the full result without
 driver-side collection of payloads.
+
+Scaling check: `python tools/make_scale_fixture.py N <dir>` writes an
+N-times copy of sf0.1, then `SPARK_GRAFT_SF_DIR=<dir> python bench.py`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from sparkksqldbbenchmark_spark.session import SessionConfig, get_spark
+from tools._scratch import activate
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -36,17 +42,11 @@ def stage_bench_layout(spark, sf_dir: str, files: int = 32) -> str:
     (identical rows, 32 files ≈ one per local core — the shape any real
     ingest produces); every other table is symlinked unchanged so the
     rest of the headline set measures the same bytes as prior rounds.
-    The staged path is recorded in the bench JSON (bench_layout)."""
+    The staging dir lies under the scratch root, removed at exit."""
     import glob
     import tempfile
 
-    import atexit
-    import shutil
-
     staged = tempfile.mkdtemp(prefix="bench_layout_")
-    # the staging dir holds a full copy of documents — remove it when the
-    # bench process exits, or repeated runs leak a table copy per run
-    atexit.register(shutil.rmtree, staged, ignore_errors=True)
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.basename(p)
         if name == "documents.parquet":
@@ -80,23 +80,70 @@ HEADLINE = [
     "text_quality_scores",
 ]
 
+# Extended (non-headline) timings for the newest operator families,
+# reported separately so the headline wall stays comparable round-over-round.
+EXTENDED = [
+    "hourly_series_pivot_fold",
+    "streaming_session_window_agg",
+    "exact_substring_spans",
+    "ngram_lm_familiarity",
+    "video_mjpeg_frame_extract",
+    "bm25_odds_retrieval",
+    "interval_coverage_sweep",
+    "countmin_heavy_hitters",
+    "pagerank_dupgraph_3iter",
+    "pca_power_iteration_1d",
+    "semdedup_quantized_prune",
+]
+
+
+def sample(fn, spark, run_dir: str, min_n: int, max_n: int):
+    """CONSECUTIVE timed executions of one query (build + count): at least
+    `min_n`, at most `max_n`, stopping once the newest sample no longer
+    improves on the min of the PRIOR samples by >5%. Returns the seconds
+    and the row count.
+
+    Measured r08 finding (kept as the methodology's design record): heavy
+    queries need SEVERAL consecutive executions before JVM C2 compilation
+    converges (dedup_minhash_lsh: 4.7 → 1.58 → 1.25 → 1.13 → 1.03 s), and
+    interleaving the samples round-robin across the headline set made
+    mins ~60% WORSE because each query then got only early-JIT samples
+    with a profile polluted by the other queries. Comparing the newest
+    sample against a min that includes it is trivially true for any
+    still-decreasing series, which cut improving queries off early."""
+    times: list[float] = []
+    n = 0
+    while len(times) < max_n:
+        t0 = time.time()
+        n = fn(spark, run_dir).count()
+        times.append(time.time() - t0)
+        if len(times) >= min_n and times[-1] >= 0.95 * min(times[:-1]):
+            break
+    return times, n
+
+
+def _loadavg() -> list[float]:
+    try:
+        with open("/proc/loadavg") as fh:
+            return [float(x) for x in fh.read().split()[:3]]
+    except OSError:
+        return []
+
+
+def _stat_ticks() -> list[int] | None:
+    try:
+        with open("/proc/stat") as fh:
+            return [int(x) for x in fh.readline().split()[1:]]
+    except (OSError, ValueError):
+        return None
+
 
 def main() -> None:
-    # Session-scoped scratch root (VERDICT r15 "what's wrong" #2): every
-    # tempfile.mkdtemp this process makes (streaming fixtures, layout
-    # staging, replay checkpoints) lands under one directory removed at
-    # exit. The JVM side is routed here too (ADVICE r16 #2):
-    # spark.local.dir + -Djava.io.tmpdir cover the blockmgr/spark-*
-    # shuffle scratch and Derby/metastore side files that TMPDIR alone
-    # does not govern.
-    import atexit
-    import shutil
-    import tempfile
-
-    scratch_root = tempfile.mkdtemp(prefix="bench_scratch_")
-    os.environ["TMPDIR"] = scratch_root
-    tempfile.tempdir = scratch_root
-    atexit.register(shutil.rmtree, scratch_root, ignore_errors=True)
+    # Every tempfile.mkdtemp this process makes (streaming fixtures,
+    # layout staging, replay checkpoints) lands under one root removed at
+    # exit; spark.local.dir + -Djava.io.tmpdir route the JVM's
+    # blockmgr/spark-* shuffle scratch and Derby side files there too.
+    scratch_root = activate("bench_scratch_")
     # Deployment-sized config, mirroring how the reference tunes its run
     # (SHUFFLE_PARTITIONS=10 etc.): AQE's stage-materialization barriers
     # cost ~4 s of fixed overhead per multi-shuffle query at sub-GB scale
@@ -106,11 +153,10 @@ def main() -> None:
         SessionConfig(
             app_name="bench",
             aqe=False,
-            # keep the driver-captured tail to signal only: no console
-            # progress bars interleaving with the per-query lines, and a
-            # roomier thread stack — the stream-execution thread's
-            # shutdown path can blow the default ~1m stack in regex
-            # backtracking (benign StackOverflowError spew, rc stays 0)
+            # no console progress bars interleaving with the per-query
+            # lines, and a roomier thread stack — the stream-execution
+            # thread's shutdown path can blow the default ~1m stack in
+            # regex backtracking (benign StackOverflowError spew, rc 0)
             extra={
                 "spark.ui.showConsoleProgress": "false",
                 "spark.local.dir": scratch_root,
@@ -122,137 +168,62 @@ def main() -> None:
     )
     # WARN spew (replay-shutdown job-group cancellation, single-partition
     # window notes on the bounded monitor samples) drowns the per-query
-    # stderr lines and makes round-over-round diffs noisy; the bench
-    # prints its own signal.
+    # stderr lines; the bench prints its own signal.
     spark.sparkContext.setLogLevel("ERROR")
-    # ambient load BEFORE any work starts — the load-context signal the
-    # regression rule reads (an end-of-run reading measures the bench's
-    # own 32-core footprint, not the environment)
-    try:
-        with open("/proc/loadavg") as fh:
-            loadavg_start = [float(x) for x in fh.read().split()[:3]]
-    except OSError:
-        loadavg_start = []
-
-    # r18 ADDITIVE measurement context (documented in OPTIMIZATION_r18.md):
-    # this VM shares a host, and hypervisor CPU STEAL is invisible to
-    # loadavg — a run can start at loadavg 0.4 and still lose 30% of
-    # every core to a noisy neighbor (measured 32% steal under full
-    # load this round, uniformly inflating all 12 headline rows ~1.5x
-    # with ZERO code change). Record /proc/stat steal ticks at start
-    # and end so the report carries the signal; no existing field or
-    # gate changes — the timing methodology is untouched.
-    def _stat_ticks() -> list[int] | None:
-        try:
-            with open("/proc/stat") as fh:
-                return [int(x) for x in fh.readline().split()[1:]]
-        except (OSError, ValueError):
-            return None
-
+    # Ambient load before any work starts (the end reading includes the
+    # bench itself), and /proc/stat steal ticks: hypervisor CPU steal is
+    # invisible to loadavg and inflated every headline row ~1.5x in r18.
+    loadavg_start = _loadavg()
     stat_start = _stat_ticks()
     # A11: sample process-tree CPU/RSS on a fixed cadence for the whole
     # run (reference BenchmarkRunner.scala:96-146)
     from sparkksqldbbenchmark_spark.bench.resources import ResourceSampler
 
     sampler = ResourceSampler(interval=0.5).start()
-    # JVM/codegen/parquet-datasource warm-up on the tiniest SF — engine
-    # spin-up, not query cost
+    # JVM/codegen/parquet-datasource warm-up — engine spin-up, not query
+    # cost; the events count also feeds the core-query throughput
     spark.range(1_000_000).count()
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
+    n_events = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     queries = entrymod.queries()
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     run_dir = stage_bench_layout(spark, SF_DIR)
     print(f"  bench layout staged at {run_dir}", file=sys.stderr)
 
-    # CONSECUTIVE adaptive best-of-N per query (min 3, max 6 samples,
-    # stop once the newest sample is within 5% of the running min): the
-    # min is the repeatable warm cost of the plan. Measured r08 finding
-    # (kept as the methodology's design record): heavy queries need
-    # SEVERAL consecutive executions before JVM C2 compilation converges
-    # (dedup_minhash_lsh: 4.7 → 1.58 → 1.25 → 1.13 → 1.03 s), and
-    # interleaving the samples round-robin across the headline set —
-    # tried first to dodge load bursts — made mins ~60% WORSE because
-    # each query then got only early-JIT samples with a profile polluted
-    # by the other 11 queries. Consecutive adaptive sampling reproduces
-    # the plan's converged cost to ±3% run-over-run; per-query spread
-    # (max−min) is reported so a round-over-round "regression" can be
-    # compared against this run's own observable noise floor before
-    # being called real (the r07 +4.9% drift, 9/12 queries up with zero
-    # plan changes, sat well inside it).
     # One discarded full execution of the first headline query before any
-    # sample is recorded: the range/parquet warm-up above spins the JVM
-    # but not the window-aggregate codepath, so the first query otherwise
-    # absorbs session/JIT warm-up that later queries amortize (r08:
-    # weather_window_agg 0.417 → 1.005 s purely from running first under
-    # the consecutive sampler).
+    # sample is recorded: the warm-up above spins the JVM but not the
+    # window-aggregate codepath, so the first query otherwise absorbs
+    # session/JIT warm-up that later queries amortize (r08:
+    # weather_window_agg 0.417 → 1.005 s purely from running first).
     first = queries.get(HEADLINE[0])
     if first is not None:
         first(spark, run_dir).count()
 
     samples: dict[str, list[float]] = {}
-    per_query: dict[str, float] = {}
-    total = 0.0
     for name in HEADLINE:
-        fn = queries.get(name)
-        if fn is None:
+        if name not in queries:
             continue
-        times: list[float] = []
-        n = 0
-        while len(times) < 6:
-            t0 = time.time()
-            df = fn(spark, run_dir)
-            n = df.count()
-            times.append(time.time() - t0)
-            # converged = the NEWEST sample no longer improves on the min
-            # of the PRIOR samples by >5%. Comparing against min(times)
-            # including the newest (the r08 form) is trivially true for
-            # any still-decreasing series — it cut every improving query
-            # off at exactly 3 samples, inflating reported mins.
-            if len(times) >= 3 and times[-1] >= 0.95 * min(times[:-1]):
-                break
+        times, n = sample(queries[name], spark, run_dir, 3, 6)
         samples[name] = times
         dt = min(times)
-        per_query[name] = round(dt, 3)
-        total += dt
         print(
             f"  {name}: {dt:.2f}s ({len(times)} samples,"
             f" +{max(times) - dt:.2f}s spread, {n} rows)",
             file=sys.stderr,
         )
+    per_query = {n: round(min(v), 3) for n, v in samples.items()}
+    total = sum(min(v) for v in samples.values())
 
-    # Extended (non-headline) timings for the newest operator families:
-    # best-of-2 each, separately reported so the 12-query headline wall
-    # stays comparable round-over-round.
-    extended_names = [
-        "hourly_series_pivot_fold",
-        "streaming_session_window_agg",
-        "exact_substring_spans",
-        "ngram_lm_familiarity",
-        "video_mjpeg_frame_extract",
-        "bm25_odds_retrieval",
-        "interval_coverage_sweep",
-        "countmin_heavy_hitters",
-        "pagerank_dupgraph_3iter",
-        "pca_power_iteration_1d",
-        "semdedup_quantized_prune",
-    ]
     extended: dict[str, float] = {}
-    for name in extended_names:
-        fn = queries.get(name)
-        if fn is None:
+    for name in EXTENDED:
+        if name not in queries:
             continue
-        times = []
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, run_dir).count()
-            times.append(time.time() - t0)
+        times, _ = sample(queries[name], spark, run_dir, 2, 2)
         extended[name] = round(min(times), 3)
         print(f"  extended {name}: {extended[name]:.2f}s", file=sys.stderr)
 
     # input-throughput of the core query: events rows consumed per second
     # (the reference's consumer is rate-capped at 5000 offsets/trigger and
     # its producer sustains ~100-200 msg/s — BASELINE.md)
-    n_events = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     core_s = per_query.get("weather_window_agg", 0) or 1
     core_rows_per_sec = int(n_events / core_s)
 
@@ -277,19 +248,17 @@ def main() -> None:
     # (r03→r04 drift, VERDICT r04 item 5); the start alignment removes
     # the phase component and the element-wise median across runs
     # removes one-off scheduler hiccups without averaging them in.
-    import statistics
-
     runs = [run_latency_benchmark(spark, run_seconds=20) for _ in range(3)]
     m = sorted(runs, key=lambda r: r.avg_ms)[1]  # median run, for /metrics
-    med = lambda vals: statistics.median(vals)  # noqa: E731
+    med = statistics.median
     streaming_latency = {
-        "avg_ms": round(med([m.avg_ms for m in runs]), 2),
-        "p50_ms": med([m.p50_ms for m in runs]),
-        "p95_ms": med([m.p95_ms for m in runs]),
-        "p99_ms": med([m.p99_ms for m in runs]),
-        "stddev_ms": round(med([m.stddev_ms for m in runs]), 2),
-        "samples": sum(m.sample_count for m in runs),
-        "runs": [round(m.avg_ms, 2) for m in runs],
+        "avg_ms": round(med([r.avg_ms for r in runs]), 2),
+        "p50_ms": med([r.p50_ms for r in runs]),
+        "p95_ms": med([r.p95_ms for r in runs]),
+        "p99_ms": med([r.p99_ms for r in runs]),
+        "stddev_ms": round(med([r.stddev_ms for r in runs]), 2),
+        "samples": sum(r.sample_count for r in runs),
+        "runs": [round(r.avg_ms, 2) for r in runs],
         "config": (
             "10s window, 2s trigger, 200 rows/s, update mode; "
             "median of 3 window-boundary-aligned runs. NOTE: aligned "
@@ -342,67 +311,19 @@ def main() -> None:
 
     # Load context for the run: the driver's box runs other work, so a
     # round-over-round per-query delta inside THIS run's own observable
-    # spread (query_spread below) or taken under high ambient loadavg
-    # is noise, not a regression — the rule the r08/r09 adjudications
-    # applied. loadavg = [start-of-run, end-of-run] readings; the START
-    # one is the ambient signal (the end one includes the bench itself).
-    try:
-        with open("/proc/loadavg") as fh:
-            loadavg_end = [float(x) for x in fh.read().split()[:3]]
-    except OSError:
-        loadavg_end = []
-    loadavg = {"start": loadavg_start, "end": loadavg_end}
+    # spread (query_spread below) or taken under high ambient loadavg or
+    # steal is noise, not a regression.
     stat_end = _stat_ticks()
     cpu_steal_pct = None
     if stat_start and stat_end and len(stat_start) >= 8:
-        _tick_d = [e - s for s, e in zip(stat_start, stat_end)]
-        _tick_total = sum(_tick_d)
-        if _tick_total > 0:
-            cpu_steal_pct = round(100.0 * _tick_d[7] / _tick_total, 1)
-    loadavg["cpu_steal_pct_during_run"] = cpu_steal_pct
-
-    # Load-validity gate IN the artifact (VERDICT r14 "what's wrong" #1):
-    # every round repeated the drift -> idle-re-measure -> "it was load"
-    # ritual with the idle number living only in git history. Now the
-    # artifact itself says whether the headline was taken at idle
-    # (ambient 1-min loadavg at start <= BENCH_LOAD_GATE, default 4.0 on
-    # this 32-core box), and when it was NOT, the most recent load-valid
-    # headline from the previous BENCH_local.json is carried inline as
-    # `idle_twin` so interpreting a loaded run needs no git archaeology.
-    # Tri-state (ADVICE r15): True = taken at idle, False = gate failed,
-    # None = loadavg unreadable (non-Linux/restricted env) — "load
-    # unknown" must not read as "loaded", or such environments could
-    # never seed the idle-twin carry-forward chain.
-    load_gate = float(os.environ.get("BENCH_LOAD_GATE", "4.0"))
-    headline_valid = (
-        (loadavg_start[0] <= load_gate) if loadavg_start else None
-    )
-    idle_twin = None
-    if headline_valid is False:
-        try:
-            with open(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_local.json",
-                )
-            ) as fh:
-                prev = json.load(fh)
-            cand = (
-                prev
-                if prev.get("headline_valid", False)
-                else prev.get("idle_twin")
-            )
-            if cand:
-                idle_twin = {
-                    "value": cand["value"],
-                    "queries": cand["queries"],
-                    "loadavg_start": (
-                        cand.get("loadavg", {}).get("start")
-                        or cand.get("loadavg_start")
-                    ),
-                }
-        except (OSError, ValueError, KeyError):
-            idle_twin = None
+        tick_d = [e - s for s, e in zip(stat_start, stat_end)]
+        if sum(tick_d) > 0:
+            cpu_steal_pct = round(100.0 * tick_d[7] / sum(tick_d), 1)
+    loadavg = {
+        "start": loadavg_start,
+        "end": _loadavg(),
+        "cpu_steal_pct_during_run": cpu_steal_pct,
+    }
 
     full_report = {
         "metric": "headline_queries_total_wall",
@@ -414,19 +335,16 @@ def main() -> None:
         # compare any round-over-round per-query "regression"
         # against it before calling it real
         "query_spread": {
-            n: round(max(v) - min(v), 3) for n, v in samples.items() if v
+            n: round(max(v) - min(v), 3) for n, v in samples.items()
         },
         "loadavg": loadavg,
-        "headline_valid": headline_valid,
-        "load_gate_1min": load_gate,
-        **({"idle_twin": idle_twin} if idle_twin else {}),
         "headline_methodology": (
             "one discarded warm-up execution, then consecutive "
             "adaptive best-of-N per query (3-6 samples, stop when "
             "the newest no longer improves the prior min by >5%): "
             "heavy plans need several consecutive runs for JIT "
             "convergence — interleaved sampling was measured "
-            "~60% worse (see bench.py comment). Regression rule: a "
+            "~60% worse (see bench.sample). Regression rule: a "
             "round-over-round per-query delta within this run's own "
             "query_spread, or measured under elevated loadavg, is "
             "environment noise, not a plan regression"
@@ -447,9 +365,7 @@ def main() -> None:
     # Full document → a committed file (the driver's stdout capture keeps
     # only the last ~2 kB, which truncated the r08/r09 headline dicts and
     # left perf grading blind — VERDICT r09 ask #1).
-    report_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
-    )
+    report_path = os.path.join(REPO, "BENCH_local.json")
     with open(report_path, "w") as fh:
         json.dump(full_report, fh, indent=1)
     print(f"  full report written to {report_path}", file=sys.stderr)
@@ -483,12 +399,6 @@ def compact_line(full_report: dict, limit: int = 1900) -> str:
             for k in ("avg_ms", "p50_ms", "p95_ms", "p99_ms", "stddev_ms")
         },
         "loadavg": full_report.get("loadavg", {}),
-        "headline_valid": full_report.get("headline_valid"),
-        **(
-            {"idle_twin_value": full_report["idle_twin"]["value"]}
-            if full_report.get("idle_twin")
-            else {}
-        ),
         "full_report": "BENCH_local.json",
     }
     line = json.dumps(compact, separators=(",", ":"))

@@ -79,3 +79,12 @@ def sql_stable_avg(expr: str, dp: int | None = None) -> str:
     return (
         f"CAST(sum(CAST(({expr}) AS {_SQL_DEC})) AS DOUBLE) / count({expr})"
     )
+
+
+def binary_round(col: str | Column, dp: int = 2) -> Column:
+    """Round a computed double the way DuckDB does, round(x·10^dp)/10^dp:
+    the binary value is scaled and rounded to an integer, so a median of
+    34.535 (34.534999…₂) gives 34.53 where F.round gives 34.54. Emits a
+    double."""
+    scale = float(10**dp)
+    return F.round(_c(col) * scale, 0) / scale

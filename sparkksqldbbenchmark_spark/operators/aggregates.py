@@ -12,7 +12,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkksqldbbenchmark_spark.functions.stable import stable_avg, stable_sum
+from sparkksqldbbenchmark_spark.functions.stable import (
+    binary_round,
+    stable_avg,
+    stable_sum,
+)
 
 
 def latest_by_offset(
@@ -41,6 +45,8 @@ def percentile_stats(
     percentiles, min/max/avg, population std-dev (divides by N, :286-287),
     count. Exact `percentile` is a single sort-based aggregate; at 100 TB
     swap for `percentile_approx` (t-digest, mergeable, no global sort).
+    Computed doubles (std-dev, interpolated percentiles) round as DuckDB
+    rounds them (`binary_round`); min/max are input values.
     """
     pct_arr = "array(" + ",".join(str(p) for p in percentiles) + ")"
     pcts = F.expr(f"percentile({value_col}, {pct_arr})")
@@ -49,11 +55,11 @@ def percentile_stats(
         stable_avg(value_col, round_dp).alias("avg_value"),
         F.round(F.min(value_col), round_dp).alias("min_value"),
         F.round(F.max(value_col), round_dp).alias("max_value"),
-        F.round(F.stddev_pop(value_col), round_dp).alias("stddev_value"),
+        binary_round(F.stddev_pop(value_col), round_dp).alias("stddev_value"),
     ]
     for i, p in enumerate(percentiles):
         row.append(
-            F.round(F.element_at(pcts, i + 1), round_dp).alias(
+            binary_round(F.element_at(pcts, i + 1), round_dp).alias(
                 f"p{str(p).replace('0.', '')}"
             )
         )

@@ -1108,8 +1108,9 @@ def bigram_draft_acceptance_rate(
     docs = load_table(spark, sf_dir, "documents")
     # bigrams are built SCAN-SIDE by zipping the token array with its
     # own tail — no positional self-join (the join form measured 3x
-    # slower at 1M docs in tools/scale_smoke.py --r16: it shuffles the
-    # 59M-token position table twice before the first aggregate)
+    # slower at 1M docs, docs/DESIGN_100TB.md "Round-15 scale points:
+    # round-16 staged shapes": it shuffles the 59M-token position table
+    # twice before the first aggregate)
     toks = F.split(F.trim(F.col("text")), "\\s+")
     bigrams = docs.select(
         "source",

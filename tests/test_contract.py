@@ -14,7 +14,7 @@ import sys
 import __spark_entry__ as entrymod
 from sparkksqldbbenchmark_spark.session import cluster_profile
 from tests.golden import GOLDEN, SF_DIRS
-from tools.check_correctness import GOLDEN_SFS, golden_header
+from tools.check_correctness import GOLDEN_SFS, container_columns, golden_header
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -99,11 +99,6 @@ def test_container_type_gate_rejects_planted_array_column(spark):
     result schema carries one — this test pins that the gate actually
     fires on planted container columns of each kind, and stays silent on
     the serialized boundary form (array_join / to_json)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check_correctness import container_columns
-
     from pyspark.sql import functions as F
 
     base = spark.range(3)

@@ -3,6 +3,7 @@ nulls or empty results, never exceptions."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkksqldbbenchmark_spark.llm import dedup, text
@@ -45,6 +46,33 @@ def test_percentiles_on_single_row(spark):
     assert row["sample_count"] == 1
     assert row["p5"] == 5.0 and row["p99"] == 5.0
     assert row["stddev_value"] == 0.0
+
+
+@pytest.mark.parametrize(
+    "values", [[34.53, 34.54], [34.52, 34.53, 34.54, 34.55]]
+)
+def test_percentiles_round_like_the_oracle_on_tie_medians(spark, values):
+    """Both medians are the double 34.535 (binary value 34.534999…), which
+    DuckDB's round gives as 34.53 and Spark's F.round as 34.54; every
+    column must equal the oracle's. The std-dev of the two-value set is
+    exactly 0.005, a tie that the engines' floating-point variance lands
+    on opposite sides of (DuckDB 0.0050000000000008, Spark
+    0.0049999999999990), so it is compared on the four-value set only."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.register("events", pd.DataFrame({"value": values}))
+    want = con.execute(entrymod.oracle_sql()["latency_percentiles"]).df()
+    want = want.iloc[0].to_dict()
+    df = spark.createDataFrame([(v,) for v in values], "value double")
+    got = percentile_stats(df, "value").collect()[0].asDict()
+    if len(values) == 2:
+        del got["stddev_value"], want["stddev_value"]
+    assert got["p5"] == 34.53
+    assert got == want
 
 
 def test_forward_fill_all_null_prefix(spark):

@@ -1968,16 +1968,10 @@ def test_short_and_empty_docs_match_oracle(spark, tmp_path):
     short, 15-char-boundary, empty, and whitespace-only docs beside
     a genuinely repeated long window — and re-grades the four
     window-position consumers against their unchanged oracles."""
-    import os
-    import sys
-
     import duckdb
     import pandas as pd
 
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(__file__), "..", "tools")
-    )
-    from check_correctness import canon_rows
+    from tools.check_correctness import canon_rows
 
     rep = "the quick brown fox jumps over the lazy dog again"
     docs = pd.DataFrame(

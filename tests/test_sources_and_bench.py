@@ -310,9 +310,7 @@ def test_bench_compact_line_contract():
     JSON, bounded size even with absurdly many headline queries, and
     the keys grading needs."""
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from bench import compact_line
 
     stream = {

@@ -8,11 +8,7 @@ the drift class that produced the r06 red row).
 No Spark needed — type_warnings only reads ``sdf.dtypes``.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo/tools")
-
-from check_correctness import type_warnings  # noqa: E402
+from tools.check_correctness import type_warnings
 
 
 class _FakeDF:

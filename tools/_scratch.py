@@ -1,14 +1,14 @@
-"""Session-scoped scratch root for the CLI tools (VERDICT r15 "what's
-wrong" #2, extended): some registry query builders mkdtemp fixture
-dirs (file-source streaming stand-ins, checkpoint-restart fixtures,
-binary-source scans). pytest (tests/conftest.py) and bench.py already
-route those under a per-session root removed at exit; the audit /
-correctness / demo tools run the same builders outside either harness,
-so they need the same containment or every tool run strews fixture
-dirs across /tmp.
+"""Session-scoped scratch root (VERDICT r15 "what's wrong" #2): some
+registry query builders mkdtemp fixture dirs (file-source streaming
+stand-ins, checkpoint-restart fixtures, binary-source scans). pytest
+(tests/conftest.py), bench.py and the audit / correctness tools route
+those under one per-process root removed at exit, or every run strews
+fixture dirs across /tmp.
 
-Usage: `from _scratch import activate; activate()` as the first line
-of the tool's main().
+Usage: `from tools._scratch import activate; activate()` before the
+first mkdtemp. The returned root also suits spark.local.dir and
+-Djava.io.tmpdir. The atexit removal runs after pytest's fixture
+teardown and after hooks registered later, such as the session's.
 """
 
 from __future__ import annotations

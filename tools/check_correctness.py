@@ -210,9 +210,7 @@ def load_golden() -> dict:
 
 
 def main() -> int:
-    import os as _os, sys as _sys
-    _sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
-    from _scratch import activate
+    from tools._scratch import activate
 
     activate()
     import __spark_entry__ as mod

@@ -12,9 +12,10 @@ Run: python tools/demo_reference_workflow.py  (~25 s)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkksqldbbenchmark_spark.bench.replay import run_latency_benchmark
 from sparkksqldbbenchmark_spark.bench.reports import (

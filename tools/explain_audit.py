@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from sparkksqldbbenchmark_spark.session import SessionConfig, get_spark
@@ -247,9 +249,7 @@ LATE_AUDIT = [
 
 
 def main() -> None:
-    import os as _os, sys as _sys
-    _sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
-    from _scratch import activate
+    from tools._scratch import activate
 
     activate()
     spark = get_spark(SessionConfig(shuffle_partitions=8, app_name="audit"))
@@ -272,7 +272,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(names)} plans)")
 

@@ -10,9 +10,11 @@ Run: python tools/shuffle_audit.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from sparkksqldbbenchmark_spark.session import SessionConfig, get_spark
@@ -116,9 +118,7 @@ BOUNDED_BNL = {
 
 
 def main() -> None:
-    import os as _os, sys as _sys
-    _sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
-    from _scratch import activate
+    from tools._scratch import activate
 
     activate()
     spark = get_spark(SessionConfig(shuffle_partitions=8, app_name="audit"))
@@ -197,7 +197,7 @@ def main() -> None:
         rows, key=lambda r: (isinstance(r[1], str), -(r[1] if isinstance(r[1], int) else 0))
     ):
         lines.append(f"| {name} | {ex} | {single} | {bnl} | {note} |")
-    with open("/root/repo/docs/SHUFFLE_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "SHUFFLE_AUDIT.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote docs/SHUFFLE_AUDIT.md ({len(rows)} queries)")
     if failures:
